@@ -38,7 +38,7 @@ object Explain {
       // streaming-in-function gates run their query on build; their plan
       // is the per-micro-batch IncrementalExecution, which only exists
       // while the query runs — StreamPlanCapture records the LAST
-      // micro-batch's executed plan at each gate's drainStop.
+      // micro-batch's executed plan as StreamGate stops each gate.
       if (n.startsWith("streaming_") || n == "pipeline_streaming_ingest") {
         graft.plans.StreamPlanCapture.enable()
         try SparkEntry.queries(n)(spark, sfDir).collect()

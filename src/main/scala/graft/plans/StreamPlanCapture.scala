@@ -11,9 +11,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * streaming gate's plan is a per-micro-batch IncrementalExecution that
   * only exists while the query runs and is gone once the gate stops it.
   * The gates call [[record]] immediately before `stop()` (see
-  * `StreamingQueries.drainStop`); when capture is DISABLED — every normal
-  * gate run — that call is a single volatile read, so the correctness
-  * path pays nothing. `graft.Explain` enables capture, runs the gate,
+  * `StreamGate.drainStop`, the one stop every streaming gate goes
+  * through); when capture is DISABLED — every normal gate run — that
+  * call is a single volatile read, so the correctness path pays nothing. `graft.Explain` enables capture, runs the gate,
   * then [[drain]]s the recorded plans into PLANS.md.
   *
   * Not thread-safe across concurrent Explain invocations by design: the

@@ -1,25 +1,30 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.UniqueUsersStream
+import StreamGate.writeOneFile
 
-/** Streaming entries in the correctness gate: a REAL Structured Streaming
-  * query (file source → watermarked plan → memory sink) executed to
-  * completion inside the query function, returning the materialized result
-  * so the driver's DuckDB compare checks batch/stream parity — the test
-  * axis SURVEY §3 (entry point 3) makes first-class.
+/** Streaming entries in the correctness gate: each runs a REAL Structured
+  * Streaming query (file source → stateful plan → sink) to completion
+  * inside the query function and returns the materialized result, so the
+  * DuckDB oracle compare checks batch/stream parity — the test axis
+  * SURVEY §3 (entry point 3) makes first-class. Every gate runs its query
+  * through one harness, StreamGate (start → drain → deliver each later
+  * file → drain → stop).
   *
-  * Complete output mode is used so every window (including the last,
-  * never-closed one) is emitted and the result equals the batch
-  * `count_distinct` oracle exactly. Append-mode (watermark-closing)
-  * semantics are covered in StreamingSpec where the input is controllable.
+  * The gates cover every output mode: COMPLETE emits every window,
+  * including the last, never-closed one, so it equals the batch oracle
+  * exactly; UPDATE gates the changelog shape of the reference's running
+  * counts; APPEND gates watermark-closed results, flushed by a far-future
+  * sentinel batch, with late rows dropped; and the foreachBatch
+  * versioned-state sinks (upsert, CDC, funnel state) must land on the
+  * batch query's final table.
   */
 object StreamingQueries {
-
-  private val runSeq = new AtomicInteger(0)
 
   /** Every streaming gate runs on `SparkSession.newSession()` — same
     * SparkContext (executors, block manager), but an ISOLATED SessionState:
@@ -36,57 +41,10 @@ object StreamingQueries {
     * gate body may treat its `s` as private. */
   private def isolated(f: Q): Q = (s, dir) => f(s.newSession(), dir)
 
-  /** Set a reduced shuffle-partition count on the gate's (child) session.
-    * A streaming query pins its STATE partitioning to
-    * `spark.sql.shuffle.partitions` at start, and every micro-batch then
-    * pays one state-store instance (for RocksDB: one native DB
-    * open/commit) per partition — at the gate's data scale, 32 partitions
-    * is pure overhead (measured 8.6 s → ~2 s). State partition count is a
-    * per-deployment sizing knob, not a semantic: at cluster scale you size
-    * it to executors × cores. No restore: the conf lives on the isolated
-    * child session (`isolated`), which no other query shares. */
-  /** Streaming gates pin 4 state partitions (deterministic across the
-    * driver's 4- and 32-cpu harnesses). `SPARK_GRAFT_STATE_PARTITIONS`
-    * overrides for scale probes (e.g. the r15 state-depth-vs-starvation
-    * probe on `streaming_running_distinct` at 100 M events); unset in
-    * driver runs, so gate behavior is unchanged there. */
-  private def setStatePartitions(s: org.apache.spark.sql.SparkSession,
-                                 n: Int): Unit =
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(n))
-
   // events.parquet carries TIMESTAMP(NANOS); readStream needs an explicit
   // schema, and asking for long ts surfaces Spark's internal epoch-MICROS
   // (Schemas.eventsRawMicros — the ns→µs floor happens in the reader).
   private val eventsRawSchema = graft.model.Schemas.eventsRawMicros
-
-  /** Stop a gate's streaming query, first offering its last micro-batch
-    * plan to the audit recorder (a volatile-read no-op outside
-    * `graft.Explain` — see StreamPlanCapture). Every gate stops through
-    * here so PLANS.md can pin streaming plans like batch ones.
-    *
-    * `SPARK_GRAFT_STREAM_PROBE=1` (a measurement knob like
-    * `SPARK_GRAFT_STATE_PARTITIONS`; unset in driver runs) additionally
-    * prints each micro-batch's engine-reported durationMs breakdown
-    * (triggerExecution = whole batch; addBatch = plan+run+sink;
-    * walCommit/commitOffsets = offset/commit log fsyncs; getBatch/
-    * latestOffset = source), the direct evidence for where the
-    * machinery gap of a gate goes (guide §1: measure first). */
-  private def drainStop(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    graft.plans.StreamPlanCapture.record(q)
-    if (sys.env.get("SPARK_GRAFT_STREAM_PROBE").contains("1")) {
-      q.recentProgress.foreach { p =>
-        val d = p.durationMs
-        def ms(k: String) = Option(d.get(k)).fold(-1L)(_.longValue())
-        println(s"[stream-probe] ${p.name} batch=${p.batchId} " +
-          s"trigger=${ms("triggerExecution")} addBatch=${ms("addBatch")} " +
-          s"walCommit=${ms("walCommit")} commitOffsets=${ms("commitOffsets")} " +
-          s"getBatch=${ms("getBatch")} latestOffset=${ms("latestOffset")} " +
-          s"queryPlanning=${ms("queryPlanning")} rows=${p.numInputRows}")
-      }
-    }
-    q.stop()
-  }
 
   private val streamingUniqueUsers: Q = (s, dir) => {
     // glob form: FileStreamSource requires a directory or glob, not a
@@ -98,18 +56,9 @@ object StreamingQueries {
         col("user_id").cast("string").as("uid"))
     val counts = UniqueUsersStream.uniquePerWindow(frames,
       window = "1 minute", watermark = None)
-    val sink = s"streaming_unique_users_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = counts.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("complete")
-        .start()
-      try q.processAllAvailable() finally drainStop(q)
-    }
-    s.table(sink).select(
-      unix_timestamp(col("window_start")).as("minute"),
-      col("unique_users"))
+    s.table(StreamGate.run(s, "streaming_unique_users", counts, "complete"))
+      .select(unix_timestamp(col("window_start")).as("minute"),
+        col("unique_users"))
   }
 
   // Same oracle as the batch flagship — THE parity statement.
@@ -122,9 +71,9 @@ object StreamingQueries {
     * file-source stream. The whole file arrives in one micro-batch, so
     * each bucket emits exactly one (final) running count — which must
     * equal the batch distinct-count oracle. Requires the RocksDB state
-    * store provider (set per-run, restored after). */
+    * store provider, set on the gate's isolated child session (`isolated`),
+    * so nothing needs restoring. */
   private val streamingRunningDistinct: Q = (s, dir) => {
-    // provider set on the gate's isolated child session — no restore
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     locally {
@@ -139,28 +88,17 @@ object StreamingQueries {
           graft.model.Schemas.tsFromMicros(col("ts")).as("eventTime"))
         .as[graft.streaming.RunningDistinct.In]
       val out = graft.streaming.RunningDistinct.runningUniquePerBucket(frames)
-      val sink = s"streaming_running_distinct_${runSeq.incrementAndGet()}"
-      setStatePartitions(s, 4)
-      locally {
-        val q = out.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally drainStop(q)
-      }
-      s.table(sink).select(col("bucket").as("minute"),
-        col("uniqueUsers").as("unique_users"))
+      s.table(StreamGate.run(s, "streaming_running_distinct", out.toDF(),
+          "update"))
+        .select(col("bucket").as("minute"),
+          col("uniqueUsers").as("unique_users"))
     }
   }
 
-  /** Delete-if-present then recreate a scratch dir (closing the walk
-    * stream — Files.walk holds a directory handle until closed). */
-  private def freshDir(tmp: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(tmp)) {
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+  /** The gate's scratch dir (`scratchPath`), emptied and recreated. */
+  private def freshScratch(tag: String, dir: String): Path = {
+    val tmp = Paths.get(scratchPath(tag, dir))
+    deleteTree(tmp)
     Files.createDirectories(tmp)
   }
 
@@ -172,9 +110,7 @@ object StreamingQueries {
     * either way (FileStreamSource puts every file available at start
     * into the first batch; later sentinel files still arrive strictly
     * after batch 1 commits, by progressive delivery). */
-  private def stageEventsAsBatch1(dir: String,
-      tmp: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Paths}
+  private def stageEventsAsBatch1(dir: String, tmp: Path): Unit = {
     val src = Paths.get(dir, "events.parquet")
     if (Files.isDirectory(src)) {
       val list = Files.list(src)
@@ -192,40 +128,21 @@ object StreamingQueries {
     } else Files.copy(src, tmp.resolve("batch1.parquet"))
   }
 
-  /** Write `df` as a single parquet file at `target`. Multi-batch gates
-    * get their batch boundaries from PROGRESSIVE DELIVERY (each file is
-    * written only after the previous `processAllAvailable` commits), so
-    * file mtimes — FileStreamSource's pending-file order — never decide
-    * anything and the gates carry no wall-clock coupling.
-    *
-    * Staging happens in a SIBLING of the watched dir, never inside it:
-    * `tmp` is the directory the gate's `readStream` globs with a
-    * star-dot-parquet pattern, and a staging DIRECTORY named `_stage_X.parquet`
-    * inside it matches that glob — the source's poll can then list the
-    * part-file within during the write→move window and fail its next
-    * getBatch with FileNotFound once the move takes the file away (the
-    * leading underscore hides the dir from a batch read's file index, but
-    * glob expansion matches it first). Only the atomic `Files.move`
-    * endpoint may ever be visible under the glob. */
-  private def writeOneFile(df: org.apache.spark.sql.DataFrame,
-      tmp: java.nio.file.Path, target: String): Unit = {
-    import java.nio.file.Files
-    val scratch = tmp.resolveSibling(
-      s"${tmp.getFileName}_stage_$target")
-    df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-    val list = Files.list(scratch)
-    val part = try list
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .findFirst().get()
-    finally list.close()
-    Files.move(part, tmp.resolve(target))
-    // the staging dir may sit OUTSIDE the gate's scratch root (when the
-    // watched dir is the root itself), where freshDir never reclaims it
-    val walk = Files.walk(scratch)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
-    finally walk.close()
-  }
+  /** The latest event time of the fixture, in epoch micros. */
+  private def maxEventUs(s: SparkSession, dir: String): Long =
+    s.read.schema(eventsRawSchema).parquet(s"$dir/events.parquet*")
+      .agg(max(col("ts"))).head().getLong(0)
+
+  /** Far-future sentinel events, one per (negative) key — user_id =
+    * event_id = key, event time = `maxUs` + 1 day. Delivered as the last
+    * micro-batch they advance the watermark past every real window,
+    * session or join-match end, so append mode emits every final result
+    * (the standard "advance event time to flush" pattern); callers filter
+    * the sentinels' own rows back out. */
+  private def sentinel(s: SparkSession, maxUs: Long, keys: Long*): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(keys.map(k =>
+      Row(k, maxUs + 86400L * 1000000L, k, "sentinel", 0.0, null)): _*),
+      eventsRawSchema)
 
   /** The reference's OBSERVED output semantics gated end-to-end: with its
     * cache buffering disabled (UniqueUsersApp.java:76, cache.max.bytes
@@ -248,12 +165,10 @@ object StreamingQueries {
     * reference's running-count changelog is hash-checked, unlike r2 where
     * only spec-level coverage existed (VERDICT r2 "What's missing" #2). */
   private val streamingUpdateChangelog: Q = (s, dir) => {
-    import java.nio.file.Paths
-    val tmp = Paths.get(scratchPath("streaming_uu_update", dir))
-    freshDir(tmp)
+    val tmp = freshScratch("streaming_uu_update", dir)
     val events = s.read.schema(eventsRawSchema).parquet(s"$dir/events.parquet")
-    writeOneFile(events.filter(col("user_id") % 2 === 0), tmp,
-      "batch1_even.parquet")
+    writeOneFile(events.filter(col("user_id") % 2 === 0),
+      tmp.resolve("batch1_even.parquet"))
     val frames = s.readStream
       .schema(eventsRawSchema)
       .parquet(s"$tmp/*.parquet")
@@ -261,29 +176,13 @@ object StreamingQueries {
         col("user_id").cast("string").as("uid"))
     val counts = UniqueUsersStream.uniquePerWindow(frames,
       window = "1 minute", watermark = None)
-    val sink = s"streaming_uu_update_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = counts.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("update")
-        .start()
-      try {
-        q.processAllAvailable() // batch 1: even users only
-        writeOneFile(events.filter(col("user_id") % 2 =!= 0), tmp,
-          "batch2_odd.parquet")
-        q.processAllAvailable() // batch 2: odd users
-        // the changelog-shape oracle below derives n_emissions from the
-        // two parity classes arriving as exactly two data micro-batches
-        // (progressive delivery). If a FileStreamSource batching change
-        // ever merges or splits them, fail HERE, loudly, instead of
-        // hash-mismatching obscurely at the driver compare.
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        require(dataBatches == 2,
-          s"changelog-shape oracle assumes exactly 2 data micro-batches " +
-            s"(one per parity class), but the source delivered $dataBatches")
-      } finally drainStop(q)
-    }
+    // batch 1: even users only; batch 2: odd users. The changelog-shape
+    // oracle below derives n_emissions from the two parity classes
+    // arriving as exactly two data micro-batches.
+    val sink = StreamGate.run(s, "streaming_uu_update", counts, "update",
+      deliver = Seq(tmp.resolve("batch2_odd.parquet") ->
+        events.filter(col("user_id") % 2 =!= 0)),
+      dataBatches = 2)
     s.table(sink)
       .groupBy(col("window_start"))
       .agg(max(col("unique_users")).as("unique_users"),
@@ -307,52 +206,26 @@ object StreamingQueries {
 
   /** Append-mode gate harness: stream `events.parquet` from a scratch
     * dir, run `build(frames)` with a memory sink in APPEND mode, then
-    * inject ONE far-future sentinel event (user_id/event_id = −1, event
-    * time = real max + 1 day) as a second micro-batch — advancing the
-    * watermark past every real window/session end so append mode emits
-    * every final result. The standard "advance event time to flush"
-    * pattern; callers filter the sentinel's own row back out.
+    * deliver ONE far-future `sentinel` event (key −1) as a second
+    * micro-batch, so append mode emits every final result; callers filter
+    * the sentinel's own row back out. Returns the sink table and the
+    * fixture's max event time the sentinel was placed after.
     *
     * Scratch dir is keyed by (sfDir, pid) so two processes gating the
-    * same sfDir concurrently can't delete each other's in-flight files,
-    * and all directory walks/listings are closed (try/finally — Files
-    * .walk/list hold an open directory handle until closed). */
-  private def appendWithSentinelFlush(s: org.apache.spark.sql.SparkSession,
-      dir: String, tag: String)(
-      build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(scratchPath(tag, dir))
-    freshDir(tmp)
+    * same sfDir concurrently can't delete each other's in-flight files. */
+  private def appendWithSentinelFlush(s: SparkSession, dir: String,
+      tag: String)(build: DataFrame => DataFrame): (DataFrame, Long) = {
+    val tmp = freshScratch(tag, dir)
     stageEventsAsBatch1(dir, tmp)
     val frames = s.readStream
       .schema(eventsRawSchema)
       .parquet(s"$tmp/*.parquet")
-    val out = build(frames)
-    val sink = s"${tag}_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = out.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable() // batch 1: all real events
-        // batch 1 is the whole fixture regardless of layout (one file or
-        // staged part files) — read the max event time from the source
-        val maxUs = s.read.schema(eventsRawSchema)
-          .parquet(s"$dir/events.parquet*")
-          .agg(max(col("ts"))).head().getLong(0)
-        val dayUs = 86400L * 1000000L
-        val sentinel = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        sentinel.add(org.apache.spark.sql.Row(
-          -1L, maxUs + dayUs, -1L, "sentinel", 0.0, null))
-        writeOneFile(s.createDataFrame(sentinel, eventsRawSchema), tmp,
-          "zz_batch2.parquet")
-        q.processAllAvailable() // batch 2 + no-data flush batch
-      } finally drainStop(q)
-    }
-    s.table(sink)
+    // batch 1 is the whole fixture regardless of layout (one file or
+    // staged part files) — read the max event time from the source
+    val maxUs = maxEventUs(s, dir)
+    val sink = StreamGate.run(s, tag, build(frames), "append",
+      deliver = Seq(tmp.resolve("zz_batch2.parquet") -> sentinel(s, maxUs, -1L)))
+    (s.table(sink), maxUs)
   }
 
   /** Session windows through a REAL streaming execution: the same
@@ -374,7 +247,7 @@ object StreamingQueries {
         .withWatermark("eventTime", "0 seconds")
       graft.operators.Windowing.sessionStats(
         frames, col("eventTime"), col("user_id"), "30 minutes")
-    }.filter(col("key") >= 0)
+    }._1.filter(col("key") >= 0)
       .select(col("key").as("user_id"),
         col("session_start"), col("session_end"), col("n_events"))
 
@@ -388,21 +261,19 @@ object StreamingQueries {
     * result must equal the same batch count_distinct oracle as the
     * complete-mode flagship. */
   private val streamingUniqueUsersAppend: Q = (s, dir) => {
-    val counts = appendWithSentinelFlush(s, dir, "streaming_uu_append") { raw =>
-      val frames = raw.select(
-        graft.model.Schemas.tsFromMicros(col("ts")).as("eventTime"),
-        col("user_id").cast("string").as("uid"))
-      UniqueUsersStream.uniquePerWindow(frames,
-        window = "1 minute", watermark = Some("1 minute"))
-    }
+    val (counts, maxUs) =
+      appendWithSentinelFlush(s, dir, "streaming_uu_append") { raw =>
+        val frames = raw.select(
+          graft.model.Schemas.tsFromMicros(col("ts")).as("eventTime"),
+          col("user_id").cast("string").as("uid"))
+        UniqueUsersStream.uniquePerWindow(frames,
+          window = "1 minute", watermark = Some("1 minute"))
+      }
     // defensive sentinel drop: every real window starts ≤ the real max
     // event time; the sentinel's window (a day later) can only start
     // after it. (With a 1-minute watermark the sentinel's own window
     // never closes, so it shouldn't be emitted at all — but the filter
     // keys on the DATA, not on that emission subtlety.)
-    val maxUs = s.read.schema(eventsRawSchema)
-      .parquet(s"$dir/events.parquet*")
-      .agg(max(col("ts"))).head().getLong(0)
     counts.filter(unix_timestamp(col("window_start")) <=
         Math.floorDiv(maxUs, 1000000L))
       .select(unix_timestamp(col("window_start")).as("minute"),
@@ -423,9 +294,7 @@ object StreamingQueries {
     * range (couples the dump to its 2016 sample), this reads whatever
     * the checkpoint holds. */
   private val stateStoreDump: Q = (s, dir) => {
-    import java.nio.file.Paths
-    val ckpt = Paths.get(scratchPath("state_dump", dir))
-    freshDir(ckpt)
+    val ckpt = freshScratch("state_dump", dir)
     val frames = s.readStream
       .schema(eventsRawSchema)
       .parquet(s"$dir/events.parquet*")
@@ -433,16 +302,8 @@ object StreamingQueries {
         col("user_id").cast("string").as("uid"))
     val counts = UniqueUsersStream.uniquePerWindow(frames,
       window = "1 minute", watermark = None)
-    val sink = s"state_dump_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = counts.writeStream
-        .format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("complete")
-        .start()
-      try q.processAllAvailable() finally drainStop(q)
-    }
+    StreamGate.run(s, "state_dump", counts, "complete",
+      sink = _.format("memory").option("checkpointLocation", ckpt.toString))
     val agg = s.read.format("statestore")
       .option("operatorId", 0).load(ckpt.toString)
       .select(unix_timestamp(col("key.w.start")).as("minute"),
@@ -477,19 +338,11 @@ object StreamingQueries {
     val joined = graft.streaming.StreamJoins.withinLookback(
       side("view"), side("purchase"),
       watermark = "0 seconds", lookback = "60 minutes")
-    val sink = s"streaming_stream_join_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = joined.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("append")
-        .start()
-      try q.processAllAvailable() finally drainStop(q)
-    }
-    s.table(sink).select(col("key").as("user_id"),
-      col("left_id").as("view_id"), col("right_id").as("purchase_id"),
-      unix_timestamp(col("left_t")).as("view_ts"),
-      unix_timestamp(col("right_t")).as("purchase_ts"))
+    s.table(StreamGate.run(s, "streaming_stream_join", joined, "append"))
+      .select(col("key").as("user_id"),
+        col("left_id").as("view_id"), col("right_id").as("purchase_id"),
+        unix_timestamp(col("left_t")).as("view_ts"),
+        unix_timestamp(col("right_t")).as("purchase_ts"))
   }
 
   // µs-truncated comparisons mirror Spark's TimestampType precision
@@ -517,9 +370,7 @@ object StreamingQueries {
     * batch LEFT JOIN — matched multiplicity and null padding must agree
     * row-for-row. */
   private val streamingOuterJoin: Q = (s, dir) => {
-    import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(scratchPath("souter", dir))
-    freshDir(tmp)
+    val tmp = freshScratch("souter", dir)
     stageEventsAsBatch1(dir, tmp)
     def side(tp: String) = s.readStream
       .schema(eventsRawSchema)
@@ -532,27 +383,10 @@ object StreamingQueries {
       side("view"), side("purchase"),
       watermark = "0 seconds", lookback = "60 minutes",
       joinType = "left_outer")
-    val sink = s"streaming_outer_join_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = joined.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable() // batch 1: all real events
-        val maxUs = s.read.schema(eventsRawSchema)
-          .parquet(s"$dir/events.parquet")
-          .agg(max(col("ts"))).head().getLong(0)
-        val farUs = maxUs + 86400L * 1000000L
-        val sent = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        sent.add(org.apache.spark.sql.Row(-1L, farUs, -1L, "sentinel", 0.0, null))
-        sent.add(org.apache.spark.sql.Row(-2L, farUs, -2L, "sentinel", 0.0, null))
-        writeOneFile(s.createDataFrame(sent, eventsRawSchema), tmp,
-          "zz_sentinel.parquet")
-        q.processAllAvailable() // sentinel batch + expiry-flush batch
-      } finally drainStop(q)
-    }
+    // batch 1: all real events; then the sentinel batch + expiry flush
+    val sink = StreamGate.run(s, "streaming_outer_join", joined, "append",
+      deliver = Seq(tmp.resolve("zz_sentinel.parquet") ->
+        sentinel(s, maxEventUs(s, dir), -1L, -2L)))
     s.table(sink).filter(col("key") >= 0)
       .select(col("key").as("user_id"),
         col("left_id").as("view_id"), col("right_id").as("purchase_id"),
@@ -591,9 +425,7 @@ object StreamingQueries {
     * back-to-back after the on-time batch would still see wm = 0 and be
     * admitted — measured exactly that with pre-written files. */
   private val streamingLateDataDrop: Q = (s, dir) => {
-    import java.nio.file.Paths
-    val tmp = Paths.get(scratchPath("streaming_late_drop", dir))
-    freshDir(tmp)
+    val tmp = freshScratch("streaming_late_drop", dir)
     val events = s.read.schema(eventsRawSchema).parquet(s"$dir/events.parquet")
     // minute-truncated epoch seconds of the raw epoch-micros ts column
     val minuteCol = unix_timestamp(date_trunc("minute",
@@ -601,8 +433,8 @@ object StreamingQueries {
     val bounds = events.agg(
       min(minuteCol).as("m0"), max(col("ts")).as("maxUs")).head()
     val (m0, maxUs) = (bounds.getLong(0), bounds.getLong(1))
-    writeOneFile(events.filter(minuteCol >= m0 + 600), tmp,
-      "batch1_ontime.parquet")
+    writeOneFile(events.filter(minuteCol >= m0 + 600),
+      tmp.resolve("batch1_ontime.parquet"))
     val frames = s.readStream
       .schema(eventsRawSchema)
       .parquet(s"$tmp/*.parquet")
@@ -610,26 +442,12 @@ object StreamingQueries {
         col("user_id").cast("string").as("uid"))
     val counts = UniqueUsersStream.uniquePerWindow(frames,
       window = "1 minute", watermark = Some("1 minute"))
-    val sink = s"streaming_late_drop_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = counts.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable() // on-time batch + watermark-commit batch
-        writeOneFile(events.filter(minuteCol < m0 + 600), tmp,
-          "batch2_late.parquet")
-        q.processAllAvailable() // late batch: every row behind the watermark
-        val sentinel = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        sentinel.add(org.apache.spark.sql.Row(
-          -1L, maxUs + 86400L * 1000000L, -1L, "sentinel", 0.0, null))
-        writeOneFile(s.createDataFrame(sentinel, eventsRawSchema), tmp,
-          "zz_batch3_sentinel.parquet")
-        q.processAllAvailable() // flush every real window
-      } finally drainStop(q)
-    }
+    // on-time batch + watermark-commit batch; then the late batch, every
+    // row behind the watermark; then the sentinel, flushing every window
+    val sink = StreamGate.run(s, "streaming_late_drop", counts, "append",
+      deliver = Seq(
+        tmp.resolve("batch2_late.parquet") -> events.filter(minuteCol < m0 + 600),
+        tmp.resolve("zz_batch3_sentinel.parquet") -> sentinel(s, maxUs, -1L)))
     s.table(sink)
       .filter(unix_timestamp(col("window_start")) <=
         Math.floorDiv(maxUs, 1000000L)) // sentinel's own window out
@@ -687,11 +505,9 @@ object StreamingQueries {
     * duplicate survived, distinct-user counts prove no original was lost
     * (event_id is unique in the source, making the oracle exact). */
   private val streamingDedupWithinWatermark: Q = (s, dir) => {
-    import java.nio.file.Paths
-    val tmp = Paths.get(scratchPath("streaming_ddww", dir))
-    freshDir(tmp)
+    val tmp = freshScratch("streaming_ddww", dir)
     val events = s.read.schema(eventsRawSchema).parquet(s"$dir/events.parquet")
-    writeOneFile(events, tmp, "batch1_all.parquet")
+    writeOneFile(events, tmp.resolve("batch1_all.parquet"))
     val deduped = s.readStream
       .schema(eventsRawSchema)
       .parquet(s"$tmp/*.parquet")
@@ -706,32 +522,17 @@ object StreamingQueries {
     // deduped stream distributed; the verification aggregate then reads
     // the sink files batch-side. (Found by the r14 1000× campaign — the
     // operator was fine, the harness wasn't.)
-    val sinkDir = Paths.get(scratchPath("streaming_ddww_sink", dir))
-    val ckpt = Paths.get(scratchPath("streaming_ddww_ckpt", dir))
-    freshDir(sinkDir)
-    freshDir(ckpt)
-    setStatePartitions(s, 4)
-    locally {
-      val q = deduped.writeStream
-        .format("parquet")
-        .option("path", sinkDir.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable() // batch 1: the full original event set
-        writeOneFile(events.filter(col("event_id") % 3 === 0), tmp,
-          "batch2_redelivered.parquet")
-        q.processAllAvailable() // batch 2: the re-deliveries, all dropped
-        // the gate only proves cross-batch dedup if the re-delivery
-        // really arrived as a SECOND data micro-batch — fail loudly on
-        // source-batching drift rather than silently testing less
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        require(dataBatches == 2,
-          s"redelivery must arrive as its own micro-batch " +
-            s"(expected 2 data batches, source delivered $dataBatches)")
-      } finally drainStop(q)
-    }
+    val sinkDir = freshScratch("streaming_ddww_sink", dir)
+    val ckpt = freshScratch("streaming_ddww_ckpt", dir)
+    // batch 1: the full original event set; batch 2: the re-deliveries,
+    // all dropped. The gate only proves cross-batch dedup if the
+    // re-delivery really arrives as a SECOND data micro-batch.
+    StreamGate.run(s, "streaming_ddww", deduped, "append",
+      sink = _.format("parquet").option("path", sinkDir.toString)
+        .option("checkpointLocation", ckpt.toString),
+      deliver = Seq(tmp.resolve("batch2_redelivered.parquet") ->
+        events.filter(col("event_id") % 3 === 0)),
+      dataBatches = 2)
     s.read.parquet(sinkDir.toString)
       .groupBy(unix_timestamp(date_trunc("minute", col("eventTime"))).as("minute"))
       .agg(count(lit(1)).as("n_events"),
@@ -744,7 +545,77 @@ object StreamingQueries {
       |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
       |FROM events GROUP BY 1""".stripMargin
 
-  // every gate session-isolated at the registry edge (see `isolated`)
+  /** Row-local codegen'd shingle hashes / first-LSH-band key — the
+    * in-stream near-dedup kernels, shared by `streaming_near_dedup` and
+    * `pipeline_streaming_ingest`. */
+  private def hsOf(text: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.functions.WordShingleHashes(expression(text), NdShingleN))
+  }
+  private def bandKeyOf(hs: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    import graft.operators.DedupOps
+    element_at(
+      column(graft.functions.MinHashBandKeys(expression(hs),
+        (0 until NdNumHashes).map(DedupOps.mhA),
+        (0 until NdNumHashes).map(DedupOps.mhB),
+        DedupOps.MinHashP, NdBands,
+        graft.functions.TextFunctions.NGramHashB,
+        graft.functions.TextFunctions.NGramHashP)), 1)
+  }
+
+  /** `docs` with its shingle hashes `hs` and first-band key `band_key`
+    * (a doc with no shingle has no key and is dropped). */
+  private def withBandKey(docs: DataFrame): DataFrame =
+    docs.withColumn("hs", hsOf(col("text")))
+      .filter(size(col("hs")) > 0)
+      .withColumn("band_key", bandKeyOf(col("hs")))
+
+  /** One doc per band key, the min doc_id (deterministic, oracle-replayed). */
+  private def canonicalPerBandKey(docs: DataFrame): DataFrame =
+    withBandKey(docs)
+      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions
+        .Window.partitionBy(col("band_key")).orderBy(col("doc_id"))))
+      .filter(col("rn") === 1).select(col("doc_id"), col("text"))
+
+  /** The near-dedup gates' two deliveries (`streaming_near_dedup`'s
+    * harness): the canonical originals, then every 3rd original
+    * re-ingested as a near-dup under the SAME canonical-per-key prep.
+    * The r11 form instead
+    * REQUIRED planted new keys to be unique — true at gate SFs, but 9 of
+    * 17001 planted keys collided on the 100× corpus (birthday pressure on
+    * band-0 keys over the low-entropy fixture vocabulary) and the gate
+    * refused to run; intra-batch collisions are prep concerns, not the
+    * cross-batch state semantics under test. */
+  private def nearDupBatches(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val docs = graft.sources.Tables.documents(s, dir)
+      .select(col("doc_id"), col("text"))
+    val plant = docs.filter(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + NdPlantOffset).as("doc_id"),
+        concat(col("text"), lit(NdPerturb)).as("text"))
+    (canonicalPerBandKey(docs), canonicalPerBandKey(plant))
+  }
+
+  /** The in-stream near-dedup chain over the docs delivered to `tmp`:
+    * band key → event time → watermark → `dropDuplicatesWithinWatermark`
+    * on the band key. */
+  private def nearDedupStream(s: SparkSession, tmp: Path): DataFrame =
+    withBandKey(s.readStream
+        .schema(StructType(Seq(
+          StructField("doc_id", LongType), StructField("text", StringType))))
+        .parquet(s"$tmp/*.parquet"))
+      // deterministic event time from the doc id; a planted doc (+1e6)
+      // shares its original's event time, so redeliveries are never late.
+      // +3 days keeps doc 0 off the epoch-0 boundary — the initial
+      // watermark is 0, and an event AT the watermark is filtered as
+      // late by the stateful-op late-record check (observed: doc 0
+      // silently dropped without the offset)
+      .withColumn("eventTime",
+        timestamp_micros((col("doc_id") % NdPlantOffset + 259200L) * 1000000L))
+      .withWatermark("eventTime", "2 days")
+      .dropDuplicatesWithinWatermark("band_key")
+
   /** Streaming NEAR-duplicate dedup — the dedup library composed with the
     * streaming layer, the operator a streaming ingestion pipeline
     * actually runs: per-document MinHash band keys computed IN-STREAM by
@@ -777,95 +648,16 @@ object StreamingQueries {
     * Oracle: the same shingle→minhash→band-0 pipeline as CTEs over the
     * union corpus (the minhash_lsh_pairs arithmetic-band-key contract).
     * Output: every kept (doc_id, band_key) — 478 + 16 rows at sf0.01. */
-  /** Row-local codegen'd shingle hashes / first-LSH-band key — the
-    * in-stream near-dedup kernels, shared by `streaming_near_dedup` and
-    * `pipeline_streaming_ingest`. */
-  private def hsOf(text: org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(graft.functions.WordShingleHashes(expression(text), NdShingleN))
-  }
-  private def bandKeyOf(hs: org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    import graft.operators.DedupOps
-    element_at(
-      column(graft.functions.MinHashBandKeys(expression(hs),
-        (0 until NdNumHashes).map(DedupOps.mhA),
-        (0 until NdNumHashes).map(DedupOps.mhB),
-        DedupOps.MinHashP, NdBands,
-        graft.functions.TextFunctions.NGramHashB,
-        graft.functions.TextFunctions.NGramHashP)), 1)
-  }
-
   private val streamingNearDedup: Q = (s, dir) => {
-    import java.nio.file.Paths
-    val tmp = Paths.get(scratchPath("streaming_near_dedup", dir))
-    freshDir(tmp)
-    val docs = graft.sources.Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-    val withKey = docs
-      .withColumn("hs", hsOf(col("text")))
-      .filter(size(col("hs")) > 0)
-      .withColumn("band_key", bandKeyOf(col("hs")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band_key")).orderBy(col("doc_id"))
-    val canon = withKey.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).select(col("doc_id"), col("text"))
-    writeOneFile(canon, tmp, "batch1_canonical.parquet")
-    // doc-level determinism: two planted docs sharing one band key would
-    // make the in-stream survivor arrival-order-dependent, so batch 2
-    // gets the SAME canonical-per-key prep as batch 1 (min doc_id per
-    // key, deterministic and oracle-replayed). The r11 form instead
-    // REQUIRED planted new keys to be unique — true at gate SFs, but 9
-    // of 17001 planted keys collided on the 100× corpus (birthday
-    // pressure on band-0 keys over the low-entropy fixture vocabulary)
-    // and the gate refused to run; intra-batch collisions are prep
-    // concerns, not the cross-batch state semantics under test.
-    val plant = docs.filter(col("doc_id") % 3 === 0)
-      .select((col("doc_id") + NdPlantOffset).as("doc_id"),
-        concat(col("text"), lit(NdPerturb)).as("text"))
-      .withColumn("hs", hsOf(col("text")))
-      .filter(size(col("hs")) > 0)
-      .withColumn("band_key", bandKeyOf(col("hs")))
-      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy(col("band_key")).orderBy(col("doc_id"))))
-      .filter(col("rn") === 1).select(col("doc_id"), col("text"))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val deduped = s.readStream
-      .schema(docSchema)
-      .parquet(s"$tmp/*.parquet")
-      .withColumn("hs", hsOf(col("text")))
-      .filter(size(col("hs")) > 0)
-      .withColumn("band_key", bandKeyOf(col("hs")))
-      // deterministic event time from the doc id; a planted doc (+1e6)
-      // shares its original's event time, so redeliveries are never late.
-      // +3 days keeps doc 0 off the epoch-0 boundary — the initial
-      // watermark is 0, and an event AT the watermark is filtered as
-      // late by the stateful-op late-record check (observed: doc 0
-      // silently dropped without the offset)
-      .withColumn("eventTime",
-        timestamp_micros((col("doc_id") % NdPlantOffset + 259200L) * 1000000L))
-      .withWatermark("eventTime", "2 days")
-      .dropDuplicatesWithinWatermark("band_key")
-      .select(col("doc_id"), col("band_key"))
-    val sink = s"streaming_near_dedup_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = deduped.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable() // batch 1: canonical originals, all kept
-        writeOneFile(plant, tmp, "batch2_neardups.parquet")
-        q.processAllAvailable() // batch 2: near-dups dropped, new keys kept
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        require(dataBatches == 2,
-          s"near-dups must arrive as their own micro-batch " +
-            s"(expected 2 data batches, source delivered $dataBatches)")
-      } finally drainStop(q)
-    }
-    s.table(sink)
+    val tmp = freshScratch("streaming_near_dedup", dir)
+    val (canon, plant) = nearDupBatches(s, dir)
+    writeOneFile(canon, tmp.resolve("batch1_canonical.parquet"))
+    val deduped = nearDedupStream(s, tmp).select(col("doc_id"), col("band_key"))
+    // batch 1: canonical originals, all kept; batch 2: near-dups dropped,
+    // new keys kept — and it must arrive as its own micro-batch
+    s.table(StreamGate.run(s, "streaming_near_dedup", deduped, "append",
+      deliver = Seq(tmp.resolve("batch2_neardups.parquet") -> plant),
+      dataBatches = 2))
   }
 
   private val NdShingleN = 3
@@ -874,7 +666,10 @@ object StreamingQueries {
   private val NdPlantOffset = 1000000L
   private val NdPerturb = " graftdup"
 
-  private lazy val streamingNearDedupSql = {
+  /** The near-dedup oracles' shared CTE chain: the shingle → minhash →
+    * band-0 pipeline over the union corpus, then the canonical originals
+    * (`orig_canon`) and the planted near-dups (`plant`). */
+  private lazy val nearDedupCtes = {
     import graft.operators.DedupOps
     val rowsPerBand = NdNumHashes / NdBands
     val mins = (0 until rowsPerBand).map(i =>
@@ -913,8 +708,11 @@ object StreamingQueries {
       |orig_canon AS (SELECT min(doc_id) AS doc_id, band_key
       |               FROM orig GROUP BY band_key),
       |plant AS (SELECT * FROM key0
-      |          WHERE doc_id NOT IN (SELECT doc_id FROM documents))
-      |SELECT CAST(doc_id AS BIGINT) AS doc_id,
+      |          WHERE doc_id NOT IN (SELECT doc_id FROM documents))""".stripMargin
+  }
+
+  private lazy val streamingNearDedupSql = nearDedupCtes + "\n" +
+    """|SELECT CAST(doc_id AS BIGINT) AS doc_id,
       |       CAST(band_key AS BIGINT) AS band_key
       |FROM orig_canon
       |UNION ALL
@@ -925,7 +723,6 @@ object StreamingQueries {
       |FROM plant
       |WHERE band_key NOT IN (SELECT band_key FROM orig_canon)
       |GROUP BY band_key""".stripMargin
-  }
 
   // ── stream-static enrichment join ──────────────────────────────────────
   // The most common production streaming pattern: a stream joined against
@@ -951,16 +748,8 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_events"),
         (sum(round(col("value") * lit(1e4)).cast("long") * col("weight")) /
           lit(1e4)).as("weighted_value"))
-    val sink = s"streaming_static_join_${runSeq.incrementAndGet()}"
-    setStatePartitions(s, 4)
-    locally {
-      val q = agg.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("complete")
-        .start()
-      try q.processAllAvailable() finally drainStop(q)
-    }
-    s.table(sink).select(col("category"), col("n_events"), col("weighted_value"))
+    s.table(StreamGate.run(s, "streaming_static_join", agg, "complete"))
+      .select(col("category"), col("n_events"), col("weighted_value"))
   }
 
   private val streamingStaticJoinSql =
@@ -974,6 +763,33 @@ object StreamingQueries {
       |         / 10000.0 AS weighted_value
       |FROM events e JOIN dim d USING (event_type)
       |GROUP BY 1""".stripMargin
+
+  /** The time-split feed of the versioned-state gates: the fixture's
+    * `cols` split at the timeline midpoint, the early half staged in
+    * `<scratch>/in` as batch 1 and the late half as the one later
+    * delivery. Returns the scratch dir (for the state versions), the
+    * stream over `in`, and that delivery. */
+  private def midpointSplit(s: SparkSession, dir: String, tag: String,
+      cols: String*): (Path, DataFrame, Seq[(Path, DataFrame)]) = {
+    val tmp = freshScratch(tag, dir)
+    val in = Files.createDirectories(tmp.resolve("in"))
+    val evAll = s.read.schema(eventsRawSchema)
+      .parquet(s"$dir/events.parquet")
+      .select(cols.map(col): _*)
+    // `div` (integer division), not `/`: Spark's `/` on longs is DOUBLE
+    // division, which only matched the oracle's integer `//` because
+    // epoch-µs values happen to be exactly double-representable
+    val mid = evAll.agg(
+      expr("min(ts) + (max(ts) - min(ts)) div 2").cast("long").as("t"))
+      .head().getLong(0)
+    writeOneFile(evAll.filter(col("ts") <= mid), in.resolve("batch1.parquet"))
+    val frames = s.readStream
+      .schema(StructType(eventsRawSchema.fields.filter(f =>
+        cols.contains(f.name))))
+      .parquet(s"$in/*.parquet")
+    (tmp, frames,
+      Seq(in.resolve("batch2.parquet") -> evAll.filter(col("ts") > mid)))
+  }
 
   /** foreachBatch idempotent upsert sink — the production "MERGE INTO
     * keyed table" pattern (the Delta-merge shape without a table format):
@@ -990,52 +806,20 @@ object StreamingQueries {
     * touched partitions rewrite. Final table ≡ the batch
     * last-event-per-user query — the parity statement (same oracle). */
   private val streamingUpsertSink: Q = (s, dir) => {
-    import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(scratchPath("upsert", dir))
-    freshDir(tmp)
-    val in = tmp.resolve("in"); Files.createDirectories(in)
-    val evAll = s.read.schema(eventsRawSchema)
-      .parquet(s"$dir/events.parquet")
-      .select(col("user_id"), col("event_id"), col("ts"))
-    // `div` (integer division), not `/`: Spark's `/` on longs is DOUBLE
-    // division, which only matched the oracle's integer `//` because
-    // epoch-µs values happen to be exactly double-representable
-    val bounds = evAll.agg(
-      expr("min(ts) + (max(ts) - min(ts)) div 2")
-        .cast("long").as("t1")).head()
-    val t1 = bounds.getLong(0)
-
-    val merges = new AtomicInteger(0)
+    val (tmp, frames, batch2) =
+      midpointSplit(s, dir, "upsert", "user_id", "event_id", "ts")
     var current: Option[String] = None
-    val frames = s.readStream.schema(
-        StructType(graft.model.Schemas.eventsRawMicros.fields.filter(f =>
-          Seq("user_id", "event_id", "ts").contains(f.name))))
-      .parquet(s"$in/*.parquet")
-    setStatePartitions(s, 4)
-    val q = frames.writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        if (!df.isEmpty) {
-          val batchLatest = graft.streaming.UpsertSink.mergeLatest(
-            None, df, "user_id", "ts", "event_id")
-          val merged = graft.streaming.UpsertSink.mergeLatest(
-            current.map(s.read.parquet(_)), batchLatest,
-            "user_id", "ts", "event_id")
-          val out = tmp.resolve(s"state_v$id").toString
-          merged.write.mode("overwrite").parquet(out)
-          current = Some(out)
-          merges.incrementAndGet()
-          ()
-        }
-      }
-      .start()
-    try {
-      writeOneFile(evAll.filter(col("ts") <= t1), in, "batch1.parquet")
-      q.processAllAvailable()
-      writeOneFile(evAll.filter(col("ts") > t1), in, "batch2.parquet")
-      q.processAllAvailable()
-    } finally drainStop(q)
-    require(merges.get() == 2,
-      s"upsert gate expected exactly 2 merged batches, saw ${merges.get()}")
+    StreamGate.versioned(s, "streaming_upsert_sink", frames, batch2,
+        merges = 2) { (df, id) =>
+      val batchLatest = graft.streaming.UpsertSink.mergeLatest(
+        None, df, "user_id", "ts", "event_id")
+      val merged = graft.streaming.UpsertSink.mergeLatest(
+        current.map(s.read.parquet(_)), batchLatest,
+        "user_id", "ts", "event_id")
+      val out = tmp.resolve(s"state_v$id").toString
+      merged.write.mode("overwrite").parquet(out)
+      current = Some(out)
+    }
     s.read.parquet(current.get).select(
       col("user_id"), col("event_id").as("last_event_id"),
       expr("ts div 1000000").as("last_ts"))
@@ -1061,10 +845,8 @@ object StreamingQueries {
     * cost ∝ batch + touched keys, exactly `cdc_apply`'s claim, paid
     * incrementally. */
   private val streamingCdcUpsert: Q = (s, dir) => {
-    import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(scratchPath("cdc_upsert", dir))
-    freshDir(tmp)
-    val in = tmp.resolve("in"); Files.createDirectories(in)
+    val tmp = freshScratch("cdc_upsert", dir)
+    val in = Files.createDirectories(tmp.resolve("in"))
     val evAll = s.read.schema(eventsRawSchema)
       .parquet(s"$dir/events.parquet")
       .select(col("user_id"), col("event_id"), col("ts"),
@@ -1087,40 +869,27 @@ object StreamingQueries {
     val changelog = evAll.filter(col("ts") > t1)
       .withColumn("op",
         when(col("state") === "error", "D").otherwise("U"))
-    val merges = new AtomicInteger(0)
     val chgSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
       StructField("ts", LongType), StructField("state", StringType),
       StructField("value_fp", LongType), StructField("op", StringType)))
     val frames = s.readStream.schema(chgSchema).parquet(s"$in/*.parquet")
-    setStatePartitions(s, 4)
-    val q = frames.writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        if (!df.isEmpty) {
-          val batchLatest = graft.streaming.UpsertSink.mergeLatest(
-            None, df, "user_id", "ts", "event_id")
-          val merged = graft.streaming.UpsertSink.mergeLatest(
-            Some(s.read.parquet(current)), batchLatest,
-            "user_id", "ts", "event_id")
-          val out = tmp.resolve(s"state_v${id + 1}").toString
-          merged.write.mode("overwrite").parquet(out)
-          current = out
-          merges.incrementAndGet()
-          ()
-        }
-      }
-      .start()
-    try {
-      writeOneFile(changelog.filter(col("ts") <= t2), in, "batch1.parquet")
-      q.processAllAvailable()
-      val tail = changelog.filter(col("ts") > t2)
-      writeOneFile(tail, in, "batch2.parquet")
-      q.processAllAvailable()
-      writeOneFile(tail, in, "batch3_replay.parquet") // replay, verbatim
-      q.processAllAvailable()
-    } finally drainStop(q)
-    require(merges.get() == 3,
-      s"cdc gate expected 3 merged batches (2 + 1 replay), saw ${merges.get()}")
+    writeOneFile(changelog.filter(col("ts") <= t2), in.resolve("batch1.parquet"))
+    val tail = changelog.filter(col("ts") > t2)
+    // 2 batches + 1 verbatim replay of the second
+    StreamGate.versioned(s, "streaming_cdc_upsert", frames,
+        Seq(in.resolve("batch2.parquet") -> tail,
+          in.resolve("batch3_replay.parquet") -> tail),
+        merges = 3) { (df, id) =>
+      val batchLatest = graft.streaming.UpsertSink.mergeLatest(
+        None, df, "user_id", "ts", "event_id")
+      val merged = graft.streaming.UpsertSink.mergeLatest(
+        Some(s.read.parquet(current)), batchLatest,
+        "user_id", "ts", "event_id")
+      val out = tmp.resolve(s"state_v${id + 1}").toString
+      merged.write.mode("overwrite").parquet(out)
+      current = out
+    }
     graft.streaming.UpsertSink.readView(s.read.parquet(current))
       .select(col("user_id"), col("state"), col("value_fp"))
   }
@@ -1148,127 +917,42 @@ object StreamingQueries {
     * kernels, key-cardinality merges); nothing new materializes at
     * corpus scale. */
   private val pipelineStreamingIngest: Q = (s, dir) => {
-    import java.nio.file.Paths
-    val tmp = Paths.get(scratchPath("pipeline_streaming_ingest", dir))
-    freshDir(tmp)
-    val docs = graft.sources.Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-    val withKey = docs
-      .withColumn("hs", hsOf(col("text")))
-      .filter(size(col("hs")) > 0)
-      .withColumn("band_key", bandKeyOf(col("hs")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band_key")).orderBy(col("doc_id"))
-    val canon = withKey.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).select(col("doc_id"), col("text"))
-    writeOneFile(canon, tmp, "batch1_canonical.parquet")
-    // canonical-per-key batch-2 prep (min doc_id per band key) — the
-    // near-dedup gate's determinism fix: planted band keys COLLIDE at
-    // scale (9/17001 on the 100× corpus) and an undeduped batch makes
-    // the in-stream survivor arrival-order-dependent
-    val plant = docs.filter(col("doc_id") % 3 === 0)
-      .select((col("doc_id") + NdPlantOffset).as("doc_id"),
-        concat(col("text"), lit(NdPerturb)).as("text"))
-      .withColumn("hs", hsOf(col("text")))
-      .filter(size(col("hs")) > 0)
-      .withColumn("band_key", bandKeyOf(col("hs")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).select(col("doc_id"), col("text"))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val ingested = s.readStream
-      .schema(docSchema)
-      .parquet(s"$tmp/*.parquet")
-      .withColumn("hs", hsOf(col("text")))
-      .filter(size(col("hs")) > 0)
-      .withColumn("band_key", bandKeyOf(col("hs")))
-      // deterministic event time from the doc id (the near-dedup gate's
-      // convention, +3 days off the epoch-0 watermark boundary)
-      .withColumn("eventTime",
-        timestamp_micros((col("doc_id") % NdPlantOffset + 259200L) * 1000000L))
-      .withWatermark("eventTime", "2 days")
-      .dropDuplicatesWithinWatermark("band_key")
+    val tmp = freshScratch("pipeline_streaming_ingest", dir)
+    val (canon, plant) = nearDupBatches(s, dir)
+    writeOneFile(canon, tmp.resolve("batch1_canonical.parquet"))
+    val ingested = nearDedupStream(s, tmp)
       .withColumn("n_tokens",
         size(filter(split(col("text"), " "), t => t =!= "")).cast("long"))
       .filter(col("n_tokens") >= PsiMinTokens)
       .select(col("doc_id"), col("band_key"), col("n_tokens"))
-    val merges = new AtomicInteger(0)
     var current: Option[String] = None
-    setStatePartitions(s, 4)
-    val q = ingested.writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        if (!df.isEmpty) {
-          // post-dedup band keys are unique across batches, so the merge
-          // is insert-shaped by construction — the versioned MERGE
-          // plumbing (atomic new dir, idempotent replay) is what's under
-          // test, with doc_id recency as the general contract
-          val batchLatest = graft.streaming.UpsertSink.mergeLatest(
-            None, df, "band_key", "doc_id", "n_tokens")
-          val merged = graft.streaming.UpsertSink.mergeLatest(
-            current.map(s.read.parquet(_)), batchLatest,
-            "band_key", "doc_id", "n_tokens")
-          val out = tmp.resolve(s"psi_state_v$id").toString
-          merged.write.mode("overwrite").parquet(out)
-          current = Some(out)
-          merges.incrementAndGet()
-          ()
-        }
-      }
-      .start()
-    try {
-      q.processAllAvailable() // batch 1: canonical originals
-      writeOneFile(plant, tmp, "batch2_neardups.parquet")
-      q.processAllAvailable() // batch 2: near-dups dropped, new keys kept
-    } finally drainStop(q)
-    require(merges.get() == 2,
-      s"ingest pipeline expected 2 merged batches, saw ${merges.get()}")
+    // batch 1: canonical originals; batch 2: near-dups dropped, new keys kept
+    StreamGate.versioned(s, "pipeline_streaming_ingest", ingested,
+        Seq(tmp.resolve("batch2_neardups.parquet") -> plant),
+        merges = 2) { (df, id) =>
+      // post-dedup band keys are unique across batches, so the merge
+      // is insert-shaped by construction — the versioned MERGE
+      // plumbing (atomic new dir, idempotent replay) is what's under
+      // test, with doc_id recency as the general contract
+      val batchLatest = graft.streaming.UpsertSink.mergeLatest(
+        None, df, "band_key", "doc_id", "n_tokens")
+      val merged = graft.streaming.UpsertSink.mergeLatest(
+        current.map(s.read.parquet(_)), batchLatest,
+        "band_key", "doc_id", "n_tokens")
+      val out = tmp.resolve(s"psi_state_v$id").toString
+      merged.write.mode("overwrite").parquet(out)
+      current = Some(out)
+    }
     s.read.parquet(current.get)
       .select(col("doc_id"), col("band_key"), col("n_tokens"))
   }
 
   private val PsiMinTokens = 30L
 
-  private lazy val pipelineStreamingIngestSql = {
-    // the streaming_near_dedup oracle chain + the post-dedup quality
-    // filter — the batch chain the parity statement names
-    import graft.operators.DedupOps
-    val rowsPerBand = NdNumHashes / NdBands
-    val mins = (0 until rowsPerBand).map(i =>
-      s"min((${DedupOps.mhA(i)} * g + ${DedupOps.mhB(i)}) % ${DedupOps.MinHashP}) AS mh$i")
-      .mkString(",\n      |       ").stripMargin
-    import graft.functions.TextFunctions.{NGramHashB => FB, NGramHashP => FP}
-    val fold = (0 until rowsPerBand).foldLeft("CAST(0 AS BIGINT)")(
-      (acc, i) => s"((($acc) * $FB + mh$i) % $FP)")
-    s"""WITH docs2 AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + $NdPlantOffset, text || '$NdPerturb' FROM documents
-      |  WHERE doc_id % 3 = 0),
-      |toks AS (SELECT doc_id, str_split(text,' ') AS ws FROM docs2),
-      |tok AS (SELECT doc_id, w, i FROM
-      |        (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM toks)
-      |        WHERE w <> ''),
-      |sh AS (SELECT doc_id,
-      |              w || '_' || lead(w,1) OVER win || '_' || lead(w,2) OVER win AS g
-      |       FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY i)),
-      |dt AS MATERIALIZED (SELECT DISTINCT doc_id,
-      |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS g
-      |       FROM sh WHERE g IS NOT NULL),
-      |sig AS MATERIALIZED (SELECT doc_id, $mins
-      |        FROM dt GROUP BY doc_id),
-      |key0 AS (SELECT doc_id, $fold AS band_key FROM sig),
-      |-- originals classified by MEMBERSHIP in documents, not by an id
-      |-- threshold: scaled corpora (ScaleGen) shift replica doc ids far
-      |-- past the +$NdPlantOffset plant offset, so an id comparison
-      |-- silently misclassifies replica originals as planted (found by
-      |-- the 10x full-registry oracle run)
-      |orig AS (SELECT * FROM key0
-      |         WHERE doc_id IN (SELECT doc_id FROM documents)),
-      |orig_canon AS (SELECT min(doc_id) AS doc_id, band_key
-      |               FROM orig GROUP BY band_key),
-      |plant AS (SELECT * FROM key0
-      |          WHERE doc_id NOT IN (SELECT doc_id FROM documents)),
-      |kept AS (SELECT doc_id, band_key FROM orig_canon
+  // the streaming_near_dedup oracle chain + the post-dedup quality
+  // filter — the batch chain the parity statement names
+  private lazy val pipelineStreamingIngestSql = nearDedupCtes + ",\n" +
+    s"""|kept AS (SELECT doc_id, band_key FROM orig_canon
       |         UNION ALL
       |         -- min per key ≙ the batch-2 canonical prep (planted band
       |         -- keys collide at scale: 9/17001 at 100×)
@@ -1281,7 +965,6 @@ object StreamingQueries {
       |       CAST(n.n_tokens AS BIGINT) AS n_tokens
       |FROM kept k JOIN ntok n ON n.doc_id = k.doc_id
       |WHERE n.n_tokens >= $PsiMinTokens""".stripMargin
-  }
 
   /** Streaming ordered funnel — `funnel_conversion`'s incremental half,
     * run through the versioned foreachBatch state sink and gated against
@@ -1297,71 +980,43 @@ object StreamingQueries {
     * aggregates + key-cardinality joins against state — cost ∝ batch +
     * touched users, never a history re-scan. */
   private val streamingFunnel: Q = (s, dir) => {
-    import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(scratchPath("sfunnel", dir))
-    freshDir(tmp)
-    val in = tmp.resolve("in"); Files.createDirectories(in)
-    val evAll = s.read.schema(eventsRawSchema)
-      .parquet(s"$dir/events.parquet")
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-    val mid = evAll.agg(
-      expr("min(ts) + (max(ts) - min(ts)) div 2").cast("long").as("t"))
-      .head().getLong(0)
-
+    val (tmp, frames, batch2) = midpointSplit(s, dir, "sfunnel",
+      "user_id", "event_id", "ts", "event_type")
     val stateSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("t1", LongType),
       StructField("t2", LongType), StructField("t3", LongType)))
     var current: Option[String] = None
-    val merges = new AtomicInteger(0)
-    val frames = s.readStream.schema(
-        StructType(graft.model.Schemas.eventsRawMicros.fields.filter(f =>
-          Seq("user_id", "event_id", "ts", "event_type").contains(f.name))))
-      .parquet(s"$in/*.parquet")
-    setStatePartitions(s, 4)
-    val q = frames.writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        if (!df.isEmpty) {
-          val st = current.map(s.read.parquet(_)).getOrElse(
-            s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              stateSchema))
-          val b1 = df.filter(col("event_type") === "view")
-            .groupBy(col("user_id")).agg(min(col("ts")).as("bt1"))
-          // least() skips nulls: an unreached step stays null until its
-          // first candidate, then only ever decreases (it can't — later
-          // batches carry later times; least() makes that explicit)
-          val s1 = st.join(b1, Seq("user_id"), "full_outer")
-            .select(col("user_id"), least(col("t1"), col("bt1")).as("t1"),
-              col("t2"), col("t3"))
-          val b2 = df.filter(col("event_type") === "click")
-            .join(s1.select(col("user_id"), col("t1")), "user_id")
-            .filter(col("ts") > col("t1"))
-            .groupBy(col("user_id")).agg(min(col("ts")).as("bt2"))
-          val s2 = s1.join(b2, Seq("user_id"), "left")
-            .select(col("user_id"), col("t1"),
-              least(col("t2"), col("bt2")).as("t2"), col("t3"))
-          val b3 = df.filter(col("event_type") === "purchase")
-            .join(s2.select(col("user_id"), col("t2")), "user_id")
-            .filter(col("ts") > col("t2"))
-            .groupBy(col("user_id")).agg(min(col("ts")).as("bt3"))
-          val s3 = s2.join(b3, Seq("user_id"), "left")
-            .select(col("user_id"), col("t1"), col("t2"),
-              least(col("t3"), col("bt3")).as("t3"))
-          val out = tmp.resolve(s"state_v$id").toString
-          s3.write.mode("overwrite").parquet(out)
-          current = Some(out)
-          merges.incrementAndGet()
-          ()
-        }
-      }
-      .start()
-    try {
-      writeOneFile(evAll.filter(col("ts") <= mid), in, "batch1.parquet")
-      q.processAllAvailable()
-      writeOneFile(evAll.filter(col("ts") > mid), in, "batch2.parquet")
-      q.processAllAvailable()
-    } finally drainStop(q)
-    require(merges.get() == 2,
-      s"funnel gate expected exactly 2 merged batches, saw ${merges.get()}")
+    StreamGate.versioned(s, "streaming_funnel", frames, batch2,
+        merges = 2) { (df, id) =>
+      val st = current.map(s.read.parquet(_)).getOrElse(
+        s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          stateSchema))
+      val b1 = df.filter(col("event_type") === "view")
+        .groupBy(col("user_id")).agg(min(col("ts")).as("bt1"))
+      // least() skips nulls: an unreached step stays null until its
+      // first candidate, then only ever decreases (it can't — later
+      // batches carry later times; least() makes that explicit)
+      val s1 = st.join(b1, Seq("user_id"), "full_outer")
+        .select(col("user_id"), least(col("t1"), col("bt1")).as("t1"),
+          col("t2"), col("t3"))
+      val b2 = df.filter(col("event_type") === "click")
+        .join(s1.select(col("user_id"), col("t1")), "user_id")
+        .filter(col("ts") > col("t1"))
+        .groupBy(col("user_id")).agg(min(col("ts")).as("bt2"))
+      val s2 = s1.join(b2, Seq("user_id"), "left")
+        .select(col("user_id"), col("t1"),
+          least(col("t2"), col("bt2")).as("t2"), col("t3"))
+      val b3 = df.filter(col("event_type") === "purchase")
+        .join(s2.select(col("user_id"), col("t2")), "user_id")
+        .filter(col("ts") > col("t2"))
+        .groupBy(col("user_id")).agg(min(col("ts")).as("bt3"))
+      val s3 = s2.join(b3, Seq("user_id"), "left")
+        .select(col("user_id"), col("t1"), col("t2"),
+          least(col("t3"), col("bt3")).as("t3"))
+      val out = tmp.resolve(s"state_v$id").toString
+      s3.write.mode("overwrite").parquet(out)
+      current = Some(out)
+    }
     val st = s.read.parquet(current.get)
     st.agg(count(col("t1")).as("users"), lit(0L).as("sum_lag_us"))
       .select(lit("1_view").as("step"), col("users"), col("sum_lag_us"))
@@ -1395,72 +1050,44 @@ object StreamingQueries {
     * window + key-cardinality joins against state; the final cohort
     * rollup reads state relations only. */
   private val streamingSessionsFunnel: Q = (s, dir) => {
-    import java.nio.file.{Files, Paths}
-    val tmp = Paths.get(scratchPath("ssessfunnel", dir))
-    freshDir(tmp)
-    val in = tmp.resolve("in"); Files.createDirectories(in)
-    val evAll = s.read.schema(eventsRawSchema)
-      .parquet(s"$dir/events.parquet")
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-    val mid = evAll.agg(
-      expr("min(ts) + (max(ts) - min(ts)) div 2").cast("long").as("t"))
-      .head().getLong(0)
-
+    val (tmp, frames, batch2) = midpointSplit(s, dir, "ssessfunnel",
+      "user_id", "event_id", "ts", "event_type")
     var curUser: Option[String] = None
     var curSess: Option[String] = None
-    val merges = new AtomicInteger(0)
-    val frames = s.readStream.schema(
-        StructType(graft.model.Schemas.eventsRawMicros.fields.filter(f =>
-          Seq("user_id", "event_id", "ts", "event_type").contains(f.name))))
-      .parquet(s"$in/*.parquet")
-    setStatePartitions(s, 4)
-    val q = frames.writeStream.outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        if (!df.isEmpty) {
-          // the merge recurrence lives in SessionFunnelState so the
-          // batch-boundary invariance claim is property-tested against
-          // the SAME code this gate runs (EngineProperties re-splits
-          // the stream at random quantiles)
-          import graft.streaming.SessionFunnelState
-          val uSt = curUser.map(s.read.parquet(_))
-            .getOrElse(SessionFunnelState.emptyUser(s))
-          val sSt = curSess.map(s.read.parquet(_))
-            .getOrElse(SessionFunnelState.emptySess(s))
-          val (u1, s3) = SessionFunnelState.mergeBatch(df, uSt, sSt)
-          val outU = tmp.resolve(s"user_v$id").toString
-          val outS = tmp.resolve(s"sess_v$id").toString
-          // the two state writes are independent actions on disjoint
-          // output dirs — submit them concurrently so the second's
-          // tasks back-fill the first's stragglers (optimization guide
-          // §2.6 "overlap independent jobs"); results are unchanged,
-          // only the wall overlaps
-          import scala.concurrent.{Await, Future, blocking}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          // `blocking`: the future parks its thread on a Spark action —
-          // mark it so the global pool can compensate instead of
-          // starving under nested/parallel use (r15 advice)
-          val fu = Future(blocking(u1.write.mode("overwrite").parquet(outU)))
-          // the inline write may THROW while the Future's job is still
-          // in flight — always await the concurrent write before the
-          // batch body exits, or a live job keeps writing to the state
-          // dir as the exception propagates (r15 advice)
-          try s3.write.mode("overwrite").parquet(outS)
-          finally Await.result(fu, Duration.Inf)
-          curUser = Some(outU); curSess = Some(outS)
-          merges.incrementAndGet()
-          ()
-        }
-      }
-      .start()
-    try {
-      writeOneFile(evAll.filter(col("ts") <= mid), in, "batch1.parquet")
-      q.processAllAvailable()
-      writeOneFile(evAll.filter(col("ts") > mid), in, "batch2.parquet")
-      q.processAllAvailable()
-    } finally drainStop(q)
-    require(merges.get() == 2,
-      s"sessions-funnel gate expected exactly 2 merged batches, saw ${merges.get()}")
+    StreamGate.versioned(s, "streaming_sessions_funnel", frames, batch2,
+        merges = 2) { (df, id) =>
+      // the merge recurrence lives in SessionFunnelState so the
+      // batch-boundary invariance claim is property-tested against
+      // the SAME code this gate runs (EngineProperties re-splits
+      // the stream at random quantiles)
+      import graft.streaming.SessionFunnelState
+      val uSt = curUser.map(s.read.parquet(_))
+        .getOrElse(SessionFunnelState.emptyUser(s))
+      val sSt = curSess.map(s.read.parquet(_))
+        .getOrElse(SessionFunnelState.emptySess(s))
+      val (u1, s3) = SessionFunnelState.mergeBatch(df, uSt, sSt)
+      val outU = tmp.resolve(s"user_v$id").toString
+      val outS = tmp.resolve(s"sess_v$id").toString
+      // the two state writes are independent actions on disjoint
+      // output dirs — submit them concurrently so the second's
+      // tasks back-fill the first's stragglers (optimization guide
+      // §2.6 "overlap independent jobs"); results are unchanged,
+      // only the wall overlaps
+      import scala.concurrent.{Await, Future, blocking}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      // `blocking`: the future parks its thread on a Spark action —
+      // mark it so the global pool can compensate instead of
+      // starving under nested/parallel use (r15 advice)
+      val fu = Future(blocking(u1.write.mode("overwrite").parquet(outU)))
+      // the inline write may THROW while the Future's job is still
+      // in flight — always await the concurrent write before the
+      // batch body exits, or a live job keeps writing to the state
+      // dir as the exception propagates (r15 advice)
+      try s3.write.mode("overwrite").parquet(outS)
+      finally Await.result(fu, Duration.Inf)
+      curUser = Some(outU); curSess = Some(outS)
+    }
     // cohort rollup over state relations only (user- and session-sized)
     val sess = s.read.parquet(curSess.get)
     val cohort = s.read.parquet(curUser.get)

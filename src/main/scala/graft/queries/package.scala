@@ -14,8 +14,8 @@ package object queries {
     *
     * Every call also SWEEPS orphans first: a killed run (its pid no
     * longer alive) leaves `graft_<tag>_<hash>_p<deadpid>` behind —
-    * versioned state parquet, checkpoints — that its own freshDir can
-    * never reclaim (freshDir only clears the CURRENT pid's dir). The
+    * versioned state parquet, checkpoints — that a fresh scratch dir can
+    * never reclaim (it only clears the CURRENT pid's dir). The
     * sweep deletes exactly the same-(tag, sfDir) siblings whose pid is
     * dead, so a re-run after a kill starts from zero stale bytes while
     * live concurrent processes keep their dirs. */
@@ -48,15 +48,23 @@ package object queries {
             // entries mid-traversal surfaces as UncheckedIOException (a
             // RuntimeException) from walk's lazy iteration — both racers
             // must end with the dir gone, neither may crash the gate.
-            try {
-              val walk = Files.walk(p)
-              try walk.sorted(java.util.Comparator.reverseOrder())
-                .forEach(f => Files.deleteIfExists(f))
-              finally walk.close()
-            } catch { case scala.util.control.NonFatal(_) => () }
+            try deleteTree(p)
+            catch { case scala.util.control.NonFatal(_) => () }
           }
         }
       }
     } finally list.close()
+  }
+
+  /** Delete `p` and everything under it, if present (closing the walk
+    * stream — Files.walk holds a directory handle until closed). */
+  private[queries] def deleteTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
 /** A gate killed mid-run leaves its pid-keyed scratch dir (versioned
-  * state parquet, checkpoints) orphaned — the next run's freshDir only
+  * state parquet, checkpoints) orphaned — the next run's fresh scratch only
   * clears the NEW pid's dir. scratchPath must sweep dead-pid siblings at
   * call time so a re-run never reads (or pays disk for) stale state,
   * while dirs owned by LIVE processes survive the sweep. */

@@ -7,6 +7,7 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
 import sys, json, glob, os
 import duckdb
+import numpy as np
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -21,6 +22,36 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     if len(df):
         df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
+
+def compare(spark_df, duck_df, name):
+    """Column-by-column compare of two canon()'d frames; returns the
+    mismatch messages ("<name>: ..." or "<name>.<column>: ..."), empty on
+    a match. Float columns compare exactly (NaN equals NaN), every other
+    column by its string form."""
+    if list(spark_df.columns) != list(duck_df.columns):
+        return [f"{name}: columns spark={list(spark_df.columns)} "
+                f"duck={list(duck_df.columns)}"]
+    if len(spark_df) != len(duck_df):
+        return [f"{name}: rows spark={len(spark_df)} duck={len(duck_df)}"]
+    msgs = []
+    for c in spark_df.columns:
+        a, b = spark_df[c], duck_df[c]
+        try:
+            if a.dtype.kind == "f" or b.dtype.kind == "f":
+                bad = ~(np.isclose(a.astype(float), b.astype(float),
+                                   rtol=0, atol=0, equal_nan=True))
+            else:
+                bad = ~(a.astype(str) == b.astype(str))
+        except Exception as e:
+            msgs.append(f"{name}.{c}: compare error {e}")
+            break
+        if bad.any():
+            # bad is an ndarray on the float path, a Series on the
+            # string path — argmax works for both
+            i = int(np.argmax(np.asarray(bad)))
+            msgs.append(f"{name}.{c}: {int(bad.sum())}/{len(a)} mismatches, "
+                        f"first@{i}: spark={a[i]!r} duck={b[i]!r}")
+    return msgs
 
 def main(sf_dir, out_dir):
     con = duckdb.connect()
@@ -42,34 +73,10 @@ def main(sf_dir, out_dir):
             duck_df = canon(con.execute(sql).df())
         except Exception as e:
             print(f"FAIL {name}: {e}"); n_fail += 1; continue
-        ok = True
-        if list(spark_df.columns) != list(duck_df.columns):
-            print(f"FAIL {name}: columns spark={list(spark_df.columns)} duck={list(duck_df.columns)}")
-            ok = False
-        elif len(spark_df) != len(duck_df):
-            print(f"FAIL {name}: rows spark={len(spark_df)} duck={len(duck_df)}")
-            ok = False
-        else:
-            for c in spark_df.columns:
-                a, b = spark_df[c], duck_df[c]
-                try:
-                    if a.dtype.kind == "f" or b.dtype.kind == "f":
-                        import numpy as np
-                        bad = ~(np.isclose(a.astype(float), b.astype(float),
-                                           rtol=0, atol=0, equal_nan=True))
-                    else:
-                        bad = ~(a.astype(str) == b.astype(str))
-                except Exception as e:
-                    print(f"FAIL {name}.{c}: compare error {e}"); ok = False; break
-                if bad.any():
-                    # bad is an ndarray on the float path, a Series on the
-                    # string path — argmax works for both
-                    import numpy as np
-                    i = int(np.argmax(np.asarray(bad)))
-                    print(f"FAIL {name}.{c}: {int(bad.sum())}/{len(a)} mismatches, "
-                          f"first@{i}: spark={a[i]!r} duck={b[i]!r}")
-                    ok = False
-        if ok:
+        msgs = compare(spark_df, duck_df, name)
+        for m in msgs:
+            print(f"FAIL {m}")
+        if not msgs:
             print(f"PASS {name} ({len(spark_df)} rows)"); n_pass += 1
         else:
             n_fail += 1

@@ -12,40 +12,8 @@ import sys, json, glob, os, time
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    for c in df.columns:
-        if str(df[c].dtype).startswith("datetime64"):
-            df[c] = df[c].astype("datetime64[ns]")
-    if len(df):
-        df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-    return df
-
-def compare(spark_df, duck_df, name):
-    msgs = []
-    if list(spark_df.columns) != list(duck_df.columns):
-        return [f"columns spark={list(spark_df.columns)} duck={list(duck_df.columns)}"]
-    if len(spark_df) != len(duck_df):
-        return [f"rows spark={len(spark_df)} duck={len(duck_df)}"]
-    import numpy as np
-    for c in spark_df.columns:
-        a, b = spark_df[c], duck_df[c]
-        try:
-            if a.dtype.kind == "f" or b.dtype.kind == "f":
-                bad = ~(np.isclose(a.astype(float), b.astype(float),
-                                   rtol=0, atol=0, equal_nan=True))
-            else:
-                bad = ~(a.astype(str) == b.astype(str))
-        except Exception as e:
-            msgs.append(f"{c}: compare error {e}"); continue
-        if bad.any():
-            i = int(np.argmax(np.asarray(bad)))
-            msgs.append(f"{c}: {int(bad.sum())}/{len(a)} mismatches, "
-                        f"first@{i}: spark={a[i]!r} duck={b[i]!r}")
-    return msgs
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from check_oracle import canon, compare, TABLES
 
 def main():
     sf_dir, out_dir, oracle_json, ledger_path = sys.argv[1:5]
@@ -160,7 +128,7 @@ def main():
         verdict = {"pass": not msgs, "secs": dt, "secs_is": "checker_wall"}
         if msgs:
             verdict["detail"] = msgs[:5]
-            print(f"FAIL {name} ({dt}s): " + " | ".join(msgs[:3]), flush=True)
+            print(f"FAIL {' | '.join(msgs[:3])} ({dt}s)", flush=True)
         else:
             print(f"PASS {name} ({nrows} rows, {dt}s)", flush=True)
         ledger[name] = verdict

@@ -10,7 +10,7 @@ materialized as TEMP TABLEs in dependency order — each stage's spill is
 freed before the next starts, so peak temp = max(stage), not sum(phases).
 A CTE omitted from the WITH clause resolves to the temp table of the same
 name, so bodies run textually UNCHANGED; the value-compare against the
-Spark parquet is byte-for-byte the one check_oracle_inc.py performs.
+Spark parquet is byte-for-byte the one check_oracle.py performs.
 
 Usage:
   staged_replay.py <sfDir> <outDir> <oracleJson> <query> <ledgerJson> \
@@ -23,7 +23,7 @@ import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from check_oracle_inc import canon, compare, TABLES
+from check_oracle import canon, compare, TABLES
 
 
 def split_with_chain(sql):
@@ -225,7 +225,7 @@ def run_replay(sf_dir, out_dir, qname, ledger_path, ctes, names, tail,
                "staged": stages}
     if msgs:
         verdict["detail"] = msgs[:5]
-        print(f"FAIL {qname} ({dt}s): " + " | ".join(msgs[:3]), flush=True)
+        print(f"FAIL {' | '.join(msgs[:3])} ({dt}s)", flush=True)
     else:
         print(f"PASS {qname} ({len(spark_df)} rows, {dt}s, staged)", flush=True)
     ledger = {}
