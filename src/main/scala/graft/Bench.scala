@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: one JSON line with per-query and total seconds.
   *
@@ -48,36 +48,21 @@ object Bench {
     // representative (32 entries ≈ 1.4 KB worst case vs the 1.9 KB cap)
     "funnel_conversion", "prefix_filter_jaccard")
 
+  /** Force `df` via the noop SINK, not a column-less count(): count() lets
+    * Catalyst prune every column that doesn't affect the row count, so
+    * pure-projection queries measured their scan only (c4_line_filter
+    * recorded 0.057 s vs 0.58 s real materialization in r6). The noop sink
+    * evaluates and serializes every output row — each recorded number is a
+    * materialization time. */
+  def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // zstd shuffle/spill compression: the exact-verify joins
-      // (prefix_filter_jaccard at 1000× docs) retain ~2× more shuffle
-      // bytes than lz4 allows on this disk; zstd-1 halves the footprint
-      // for negligible CPU — the right default for spill-heavy exact ops
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Optional comma-separated name filter for local iteration on a
-    // hotspot (e.g. SPARK_GRAFT_ONLY=minhash_lsh_pairs); driver leaves
-    // it unset and benches the full registry.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // an unknown name must fail loudly — a silent empty filter would emit
-    // a plausible 0-second "clean" line that a consumer records as a pass
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not in registry: ${unknown.mkString(", ")}")
-      require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names no queries")
-    }
+    // SPARK_GRAFT_ONLY narrows the sweep for local iteration; unset, the
+    // sweep covers the full registry
+    val only = Queries.only.map(_.toSet)
+    val spark = GraftSession()
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // a renamed registry entry must not silently vanish from the
@@ -86,17 +71,10 @@ object Bench {
     require(staleHeadline.isEmpty,
       s"Bench.Headline names not in registry: ${staleHeadline.mkString(", ")}")
 
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
+    def runOne(name: String, fn: (SparkSession, String) => DataFrame): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      // force via the noop SINK, not a column-less count(): count() lets
-      // Catalyst prune every column that doesn't affect the row count, so
-      // pure-projection queries measured their scan only (c4_line_filter
-      // recorded 0.057 s vs 0.58 s real materialization in r6). The noop
-      // sink evaluates and serializes every output row — each recorded
-      // number is a materialization time.
-      val err = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
-      } catch { case e: Throwable => Some(e.getClass.getSimpleName) }
+      val err = try { noop(fn(spark, sfDir)); None }
+        catch { case e: Throwable => Some(e.getClass.getSimpleName) }
       // elapsed BEFORE the cache teardown — the teardown is harness
       // hygiene, not query cost, and must not bias the reported time
       val elapsed = (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Packaged-artifact smoke entry: run a registry query with NOTHING on
   * the classpath but the packaged library jar and the Spark runtime —
   * the exact footing a user's `spark-submit --jars graft.jar` job has.
@@ -17,13 +15,7 @@ object PackagedSmoke {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val name = if (args.length > 1) args(1) else "q1_agg"
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     try {
       val n = SparkEntry.queries(name)(spark, dir).count()
       println(s"[packaged-smoke] query=$name rows=$n")

@@ -31,4 +31,25 @@ object Queries {
       LineQueries.oracles ++ CorpusStatsQueries.oracles ++
       MaintenanceQueries.oracles ++ AnalyticsQueries.oracles ++
       SetSimilarityQueries.oracles
+
+  /** The registry names a user selected, in the given order. An empty
+    * selection or an unknown name fails loudly: a silent empty selection
+    * makes Bench print a 0-second line and Verify an empty oracle file, and
+    * both read downstream as a clean pass. `source` names the selection in
+    * the error. */
+  def select(names: Seq[String], source: String): Seq[String] = {
+    require(names.nonEmpty, s"$source selects no queries")
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty,
+      s"$source names queries not in registry: ${unknown.mkString(", ")}")
+    names.distinct
+  }
+
+  /** `SPARK_GRAFT_ONLY=a,b,c` restricts Bench and Verify to the named
+    * queries (local iteration on a hotspot); None, the whole registry, when
+    * unset. */
+  def only: Option[Seq[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(parseOnly)
+
+  def parseOnly(raw: String): Seq[String] =
+    select(raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq, "SPARK_GRAFT_ONLY")
 }

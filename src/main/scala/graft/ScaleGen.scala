@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× corpus synthesizer for local scale testing.
@@ -119,17 +119,11 @@ object ScaleGen {
           "their orderkeys shift together — include both or neither")
       s
     } else _ => true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts must land as int64 TIMESTAMP(MICROS), not legacy INT96:
-      // the streaming readers' explicit long-ts schema can surface an
-      // int64 column as epoch-µs but has no INT96 conversion
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // events.ts must land as int64 TIMESTAMP(MICROS), not legacy INT96:
+    // the streaming readers' explicit long-ts schema can surface an
+    // int64 column as epoch-µs but has no INT96 conversion
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     def copyVerbatim(t: String): Unit = {
       val from = java.nio.file.Paths.get(s"$src/$t.parquet")

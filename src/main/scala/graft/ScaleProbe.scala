@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.VectorOps
@@ -26,14 +25,7 @@ object ScaleProbe {
     val dir = args(0)
     val k   = args(1).toInt
     val tau = if (args.length > 2) args(2).toDouble else 0.95
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val c = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))

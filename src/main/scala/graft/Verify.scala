@@ -1,32 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd") // match Bench (spill-heavy ops)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=a,b,c restricts the dump (and the oracle json) to
-    // named queries — per-query iteration without the full 90+ sweep,
-    // mirroring Bench's filter. Unknown names fail loudly.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries in SPARK_GRAFT_ONLY: $unknown")
-    }
+    // SPARK_GRAFT_ONLY restricts the dump (and the oracle json) to the
+    // named queries, as in Bench
+    val only = Queries.only.map(_.toSet)
     def selected[V](m: Map[String, V]): Map[String, V] =
       only.fold(m)(names => m.view.filterKeys(names).toMap)
+    val spark = GraftSession()
+    new java.io.File(outDir).mkdirs()
     selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

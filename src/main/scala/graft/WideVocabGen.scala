@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic WIDE-VOCABULARY documents fixture for the similarity
@@ -49,14 +48,7 @@ object WideVocabGen {
     val out = args(1)
     val nDocs = if (args.length > 2) args(2).toInt else 5000
     val vocab = if (args.length > 3) args(3).toInt else 50000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // token rank at (doc, pos) under `salt`: floor(vocab^u) + 1 with
     // u ∈ [0,1) from a 1e9+7-bucket hash — log-uniform ≈ Zipf(1)

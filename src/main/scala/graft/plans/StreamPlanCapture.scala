@@ -7,16 +7,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Opt-in recorder for streaming gates' per-micro-batch executed plans.
   *
-  * Batch queries are plan-audited by `graft.Explain` → PLANS.md, but a
-  * streaming gate's plan is a per-micro-batch IncrementalExecution that
-  * only exists while the query runs and is gone once the gate stops it.
-  * The gates call [[record]] immediately before `stop()` (see
+  * Batch queries are plan-audited by `graft.Inspect static` → PLANS.md,
+  * but a streaming gate's plan is a per-micro-batch IncrementalExecution
+  * that only exists while the query runs and is gone once the gate stops
+  * it. The gates call [[record]] immediately before `stop()` (see
   * `StreamGate.drainStop`, the one stop every streaming gate goes
   * through); when capture is DISABLED — every normal gate run — that
-  * call is a single volatile read, so the correctness path pays nothing. `graft.Explain` enables capture, runs the gate,
-  * then [[drain]]s the recorded plans into PLANS.md.
+  * call is a single volatile read, so the correctness path pays nothing.
+  * `graft.Inspect static` enables capture, runs the gate, then [[drain]]s
+  * the recorded plans into PLANS.md.
   *
-  * Not thread-safe across concurrent Explain invocations by design: the
+  * Not thread-safe across concurrent Inspect invocations by design: the
   * audit tool is the only writer-enabler and runs gates sequentially.
   */
 object StreamPlanCapture {

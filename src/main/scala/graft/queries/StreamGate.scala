@@ -95,7 +95,7 @@ private[queries] object StreamGate {
 
   /** Stop a gate's streaming query, first offering its last micro-batch
     * plan to the audit recorder (a volatile-read no-op outside
-    * `graft.Explain` — see StreamPlanCapture), so PLANS.md can pin
+    * `graft.Inspect static` — see StreamPlanCapture), so PLANS.md can pin
     * streaming plans like batch ones.
     *
     * `SPARK_GRAFT_STREAM_PROBE=1` (a measurement knob like

@@ -8,9 +8,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * which the public [[StreamingQuery]] interface doesn't expose — only
   * `explain()`, which prints to stdout. Like [[ColumnBridge]], this shim
   * sits in the `org.apache.spark.sql` package tree to reach the
-  * `private[sql]` wrapper, so the plan-audit tooling (graft.Explain /
-  * PLANS.md) can pin streaming gates' per-micro-batch plans the same way
-  * it pins batch plans.
+  * `private[sql]` wrapper, so the plan-audit tooling (`graft.Inspect
+  * static` / PLANS.md) can pin streaming gates' per-micro-batch plans the
+  * same way it pins batch plans.
   */
 object StreamingBridge {
 

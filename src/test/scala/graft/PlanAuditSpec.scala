@@ -467,7 +467,7 @@ class PlanAuditSpec extends SparkSpec {
     // enough to matter (>1 s median in BENCH_DETAIL.json at sf0.1) must
     // have its formatted plan pinned in PLANS.md. The name list below is
     // the measured >1 s set; when a bench refresh promotes a query past
-    // 1 s, add it HERE and append its plan (`runMain graft.Explain`) —
+    // 1 s, add it HERE and append its plan (`runMain graft.Inspect static`) —
     // this test then keeps the pinned set a superset forever.
     val over1s = Seq(
       "kmv_intersection", "supplier_pagerank", "supplier_pagerank_shuffle",

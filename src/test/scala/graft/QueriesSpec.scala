@@ -33,6 +33,17 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("a query selection rejects unknown names and empty filters") {
+    assert(Queries.parseOnly(" q1_agg , q18_large_orders,") == Seq("q1_agg", "q18_large_orders"))
+    val unknown = intercept[IllegalArgumentException](Queries.parseOnly("q1_agg,no_such_query"))
+    assert(unknown.getMessage.contains("no_such_query"))
+    // "," parses to no names: without the check, Verify wrote an empty
+    // oracle file that the checker read as 0 pass / 0 fail
+    val empty = intercept[IllegalArgumentException](Queries.parseOnly(","))
+    assert(empty.getMessage.contains("selects no queries"))
+    intercept[IllegalArgumentException](Queries.select(Nil, "arguments"))
+  }
+
   test("every oracle key has a matching query") {
     val missing = Queries.oracles.keySet -- Queries.all.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
