@@ -504,32 +504,27 @@ object DedupOps {
     * Algorithm: iterative push-min label propagation. Each round pushes
     * every node's label to its neighbors (one shuffle-join of the edge
     * relation against current labels) and takes the min of own + incoming
-    * labels (one hash aggregate) — two shuffles per round; lineage is
-    * truncated every round with an eager localCheckpoint so the plan
-    * stays O(1) deep regardless of round count (on a real cluster swap
-    * in reliable `checkpoint`).
-    * Rounds needed = graph diameter. Near-dup graphs are quasi-cliques
-    * (pairs come from a similarity threshold, which is near-transitive),
-    * so diameter is small and this beats the O(log n) large-star/
-    * small-star alternating scheme in practice: each of its rounds
-    * rewrites the full EDGE relation, while a propagation round only
-    * rewrites the node-label relation (|V| ≤ |E| rows, usually ≪).
+    * labels (one hash aggregate) — two shuffles per round, run by
+    * `Fixpoint.iterate`. Rounds needed = graph diameter. Near-dup graphs
+    * are quasi-cliques (pairs come from a similarity threshold, which is
+    * near-transitive), so diameter is small and this beats the O(log n)
+    * large-star/small-star alternating scheme in practice: each of its
+    * rounds rewrites the full EDGE relation, while a propagation round
+    * only rewrites the node-label relation (|V| ≤ |E| rows, usually ≪).
     *
     * Termination: labels only ever decrease, so the global label sum is
     * strictly monotone until the fixpoint — converged exactly when the
-    * sum repeats round-over-round. The probe is one tiny aggregate over
-    * the freshly checkpointed round result (reads checkpoint blocks, not
-    * lineage), cheaper than any join-back changed-row diff.
-    * Throws if `maxIter` rounds pass without convergence — a silently
-    * unconverged labeling would be WRONG (two docs of one cluster left
-    * with different labels), never just slow. */
+    * sum repeats round-over-round, a probe cheaper than any join-back
+    * changed-row diff. Throws if `maxIter` rounds pass without
+    * convergence — a silently unconverged labeling would be WRONG (two
+    * docs of one cluster left with different labels), never just slow. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     val session = pairs.sparkSession
     // materialize the edge relation ONCE before looping: `sym` is joined in
     // every round, and without this the upstream pair-mining pipeline
     // (often a full LSH run) re-executes per round — measured 3× the total
     // runtime on the gate query. Eager localCheckpoint, same rationale as
-    // the per-round label checkpoint below.
+    // Fixpoint's per-round label checkpoint.
     val symRaw = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
       .distinct()
@@ -561,51 +556,24 @@ object DedupOps {
     // aggregate (sym is already hash(src, loopParts), so this aggregate
     // reuses that partitioning: no exchange, no session-conf dependence;
     // a clique converges at the seed itself)
-    // Convergence-probe sum rides the checkpoint job itself via
-    // `observe` (r16, guide §1.2 "don't compute things twice" applied
-    // to ACTIONS: the old per-round `labelSum` aggregate was a second
-    // job re-reading the freshly checkpointed blocks — ~half the loop's
-    // job count was probe scheduling). CollectMetricsExec is
-    // exactly-once per partition (accumulator updates from failed or
-    // duplicate task attempts are discarded — the API contract that
-    // makes streaming progress metrics reliable), and it preserves the
-    // child's outputPartitioning, so the checkpointed relation keeps
-    // the hash(node, loopParts) layout the next round's join reuses.
     // Decimal sum: a Long sum would overflow (ANSI: throw) once
     // |V| × max(id) nears 2^63 — real at billion-node corpus scale.
-    def sumAgg = sum(col("cluster_id").cast("decimal(38,0)")).as("s")
-    def observedSum(df: DataFrame): (DataFrame, BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, sumAgg).localCheckpoint()
-      val s = Option(obs.get("s"))
-        .map(d => BigDecimal(d.asInstanceOf[java.math.BigDecimal]))
-        .getOrElse(BigDecimal(0))
-      (ck, s)
-    }
-    var (labels, prevSum) = observedSum(
-      sym.groupBy(col("src"))
-        .agg(min(least(col("src"), col("dst"))).as("cluster_id"))
-        .select(col("src").as("node"), col("cluster_id")))
-    var round = 0
-    var converged = false
-    while (!converged && round < maxIter) {
+    val seed = sym.groupBy(col("src"))
+      .agg(min(least(col("src"), col("dst"))).as("cluster_id"))
+      .select(col("src").as("node"), col("cluster_id"))
+    Fixpoint.iterate("connectedComponents", seed, maxIter,
+        sum(col("cluster_id").cast("decimal(38,0)")).as("s")) { labels =>
       val pushed = sym.join(labels, col("src") === col("node"))
         .select(col("dst").as("node"), col("cluster_id"))
       // the explicit repartition pins this round's aggregate to
       // loopParts (the union discards child partitioning, and the
-      // implicit exchange would otherwise be sized by the session conf)
-      val (next, s) = observedSum(
-        labels.union(pushed)
-          .repartition(loopParts, col("node"))
-          .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")))
-      converged = s == prevSum
-      prevSum = s
-      labels = next
-      round += 1
+      // implicit exchange would otherwise be sized by the session conf);
+      // the checkpointed result keeps hash(node, loopParts), which the
+      // next round's join reuses
+      labels.union(pushed)
+        .repartition(loopParts, col("node"))
+        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id"))
     }
-    require(converged,
-      s"connectedComponents did not converge in $maxIter rounds")
-    labels
   }
 
   /** Canonical-document selection — the step that makes near-dup

@@ -37,12 +37,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   * repartition's sort-before-repartition pass.
   */
 object FanOut {
-  /** A/B probe override: SPARK_GRAFT_FANOUT_PARTS=<n> pins the fan-out
-    * width (0/1 disables entirely); unset = session default parallelism.
-    * Unset in driver runs — the knob exists for measurement, not tuning. */
-  private val partsOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_FANOUT_PARTS").map(_.toInt)
-
   /** Width target: ~64 KB of input per task. Measured A/B (r15, sf0.1
     * documents = 584 KB, 32-core box): width 8 beats width 32 by ~20 %
     * on every shingle-kernel query (per-task scheduling + codegen-stage
@@ -57,8 +51,7 @@ object FanOut {
     val cores = s.sparkContext.defaultParallelism
     val bound = BigInt(s.sessionState.conf.filesOpenCostInBytes) * cores
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = partsOverride.getOrElse(
-      (bytes / TargetBytesPerTask).min(cores).max(2).toInt)
+    val n = (bytes / TargetBytesPerTask).min(cores).max(2).toInt
     if (n > 1 && bytes <= bound) df.repartition(n, key) else df
   }
 }

@@ -12,14 +12,13 @@ import org.apache.spark.sql.functions._
   * chains and pendants that PageRank still rewards.
   *
   * Per round: one map-side-combinable degree aggregate + two hash
-  * semi-joins of the edge relation against the survivor set; the edge
-  * relation is localCheckpoint'ed per round (loop inputs must not
-  * re-derive their upstream — connectedComponents/PageRank rule). Rounds
-  * are data-dependent (a chain can peel one vertex per round), so the
-  * operator takes an explicit `maxRounds` and THROWS on non-convergence
-  * rather than silently returning a half-peeled graph — the oracle
-  * unrolls a fixed round count, which is sound because peeling is
-  * IDEMPOTENT at the fixpoint (extra unrolled rounds are no-ops).
+  * semi-joins of the edge relation against the survivor set, run by
+  * `Fixpoint.iterate`. Rounds are data-dependent (a chain can peel one
+  * vertex per round), so the operator takes an explicit `maxRounds` and
+  * THROWS on non-convergence rather than silently returning a
+  * half-peeled graph — the oracle unrolls a fixed round count, which is
+  * sound because peeling is IDEMPOTENT at the fixpoint (extra unrolled
+  * rounds are no-ops).
   *
   * Convergence detector: the directed edge count — peeling strictly
   * shrinks it until the fixpoint.
@@ -29,21 +28,10 @@ object KCore {
   /** Vertices of the k-core of the undirected unique-pair `edges`
     * (columns a, b; each pair listed once). Returns column `node`. */
   def coreMembers(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
-    // edge-count convergence probes ride the checkpoint jobs via
-    // `observe` (r16, one fewer job per round + one fewer at seed —
-    // CollectMetrics is exactly-once per partition and preserves
-    // partitioning; same fusion as connectedComponents' sum probe)
-    def observedCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (ck, obs.get("n").asInstanceOf[Long])
-    }
     val und = edges.select(col("a").cast("long"), col("b").cast("long"))
-    var (e, prev) = observedCount(
-      und.unionByName(und.select(col("b").as("a"), col("a").as("b"))))
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    Fixpoint.iterate("k-core peeling",
+        und.unionByName(und.select(col("b").as("a"), col("a").as("b"))),
+        maxRounds, count(lit(1)).as("n")) { e =>
       // keep's localCheckpoint measured FASTER than recomputing the
       // degree aggregate per semi-join reference (r15 A/B: 2.8 s vs
       // 3.6 s at sf0.1 — the un-checkpointed subplan did not
@@ -51,17 +39,9 @@ object KCore {
       val keep = e.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("a").as("n"))
         .localCheckpoint()
-      val (e2, cur) = observedCount(e
-        .join(keep, e("a") === keep("n"), "leftsemi")
+      e.join(keep, e("a") === keep("n"), "leftsemi")
         .join(keep.withColumnRenamed("n", "n2"),
-          col("b") === col("n2"), "leftsemi"))
-      converged = cur == prev
-      prev = cur
-      e = e2
-      rounds += 1
-    }
-    require(converged,
-      s"k-core peeling did not reach a fixpoint within $maxRounds rounds")
-    e.select(col("a").as("node")).distinct()
+          col("b") === col("n2"), "leftsemi")
+    }.select(col("a").as("node")).distinct()
   }
 }

@@ -1258,6 +1258,30 @@ object RelationalQueries {
       .repartition(col("x"))
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c"))
 
+  /** The supplier AFFINITY graph the triangle/k-core/hops/weighted-path
+    * gates share: each supplier keeps its `keep` strongest co-suppliers
+    * (co-order count desc, id tiebreak — a per-supplier window, bounded
+    * partitions) as undirected edges a = least, b = greatest with their
+    * count c. A pair both endpoints keep appears twice, so unweighted
+    * gates take the distinct (a, b). */
+  private def affinityEdges(s: org.apache.spark.sql.SparkSession,
+      dir: String,
+      keep: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val win = Window.partitionBy(col("x")).orderBy(col("c").desc, col("y"))
+    coSupplyCounted(s, dir).withColumn("rn", row_number().over(win))
+      .filter(col("rn") <= keep)
+      .select(least(col("x"), col("y")).as("a"),
+        greatest(col("x"), col("y")).as("b"), col("c"))
+  }
+
+  /** The oracle's side of `coSupplyCounted`: distinct (order, supplier)
+    * lines and their ordered co-supply counts, the CTE prefix of every
+    * affinity-graph oracle. */
+  private val affinityCtes =
+    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem),
+      |w AS (SELECT a.sk AS x, b.sk AS y, count(*) AS c
+      |      FROM li a JOIN li b ON a.ok = b.ok AND a.sk <> b.sk GROUP BY 1, 2),""".stripMargin
+
   // ── Link-analysis centrality: integer-unit PageRank ────────────────────
   // The co-supply graph: suppliers are adjacent when they ship lines of
   // the same order (lineitem self-join on l_orderkey, deduped, symmetric).
@@ -1295,20 +1319,14 @@ object RelationalQueries {
     * keeps its 5 strongest co-suppliers (co-order count, id tiebreak) —
     * the standard top-k sparsification that turns the near-complete
     * co-supply graph into a community-structured network (the raw graph
-    * is ~complete at every SF, where triangle counting is vacuous).
-    * Top-k-per-node is a per-supplier window (bounded partitions); the
+    * is ~complete at every SF, where triangle counting is vacuous). The
     * count itself is `operators.TriangleCount` — degree-ordered
     * orientation, O(m^1.5) wedge bound regardless of skew. The oracle
     * enumerates triangles by plain id-ordering: the triangle SET is
     * orientation-independent, so the two enumeration strategies must
     * agree row-for-row. */
   private val supplierTriangles: Q = (s, dir) => {
-    val w = coSupplyCounted(s, dir)
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("x")).orderBy(col("c").desc, col("y"))
-    val e0 = w.withColumn("rn", row_number().over(win)).filter(col("rn") <= 5)
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b")).distinct()
+    val e0 = affinityEdges(s, dir, lit(5)).select(col("a"), col("b")).distinct()
     graft.operators.TriangleCount.perNode(
         Tables.supplier(s, dir).select(col("s_suppkey").as("node")), e0)
       .join(Tables.supplier(s, dir), col("node") === col("s_suppkey"))
@@ -1316,9 +1334,7 @@ object RelationalQueries {
   }
 
   private val supplierTrianglesSql =
-    """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem),
-      |w AS (SELECT a.sk AS x, b.sk AS y, count(*) AS c
-      |      FROM li a JOIN li b ON a.ok = b.ok AND a.sk <> b.sk GROUP BY 1, 2),
+    s"""$affinityCtes
       |topk AS (SELECT x, y FROM (
       |           SELECT x, y, row_number() OVER (
       |             PARTITION BY x ORDER BY c DESC, y) AS rn FROM w)
@@ -1353,13 +1369,8 @@ object RelationalQueries {
     * exactly 8 peeling rounds, sound because peeling is idempotent at
     * the fixpoint. */
   private val supplierKcore: Q = (s, dir) => {
-    val w = coSupplyCounted(s, dir)
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("x")).orderBy(col("c").desc, col("y"))
-    val e0 = w.withColumn("rn", row_number().over(win))
-      .filter(col("rn") <= lit(2) + pmod(col("x"), lit(6)))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b")).distinct()
+    val e0 = affinityEdges(s, dir, lit(2) + pmod(col("x"), lit(6)))
+      .select(col("a"), col("b")).distinct()
     val core = graft.operators.KCore.coreMembers(e0, k = 4, maxRounds = 8)
     Tables.supplier(s, dir)
       .join(core, col("s_suppkey") === col("node"), "left")
@@ -1376,9 +1387,7 @@ object RelationalQueries {
          |k$i AS MATERIALIZED (SELECT a FROM d$i WHERE c >= 4),
          |e$i AS MATERIALIZED (SELECT e.a, e.b FROM e${i - 1} e
          |        JOIN k$i x ON e.a = x.a JOIN k$i y ON e.b = y.a)""".stripMargin
-    s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem),
-       |w AS (SELECT a.sk AS x, b.sk AS y, count(*) AS c
-       |      FROM li a JOIN li b ON a.ok = b.ok AND a.sk <> b.sk GROUP BY 1, 2),
+    s"""$affinityCtes
        |topk AS (SELECT x, y FROM (
        |           SELECT x, y, row_number() OVER (
        |             PARTITION BY x ORDER BY c DESC, y) AS rn FROM w)
@@ -1400,15 +1409,11 @@ object RelationalQueries {
     * Unreachable nodes would surface as −1 (none exist in this graph —
     * the left join states the contract anyway). */
   private val supplierHops: Q = (s, dir) => {
-    val w = coSupplyCounted(s, dir)
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("x")).orderBy(col("c").desc, col("y"))
-    val e0 = w.withColumn("rn", row_number().over(win)).filter(col("rn") <= 5)
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b")).distinct()
+    val e0 = affinityEdges(s, dir, lit(5)).select(col("a"), col("b")).distinct()
     val seed = Tables.supplier(s, dir)
       .agg(min(col("s_suppkey"))).head().getLong(0)
-    val dist = graft.operators.Bfs.hopDistances(e0, seed, maxRounds = 8)
+    val dist = graft.operators.WeightedPaths.hopDistances(
+      e0, seed, maxRounds = 8)
     Tables.supplier(s, dir)
       .join(dist, col("s_suppkey") === col("node"), "left")
       .select(col("s_suppkey"), col("s_name"),
@@ -1422,14 +1427,9 @@ object RelationalQueries {
     * case hop-BFS cannot express; the weighted completion of the graph
     * suite). Integer weights make the fixpoint test and the oracle
     * replay exact; 12 unrolled MATERIALIZED rounds in the oracle are
-    * sound by fixpoint idempotence (the Bfs/KCore convention). */
+    * sound by fixpoint idempotence (the KCore convention). */
   private val supplierWeightedPaths: Q = (s, dir) => {
-    val w = coSupplyCounted(s, dir)
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("x")).orderBy(col("c").desc, col("y"))
-    val ew = w.withColumn("rn", row_number().over(win)).filter(col("rn") <= 5)
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"), col("c"))
+    val ew = affinityEdges(s, dir, lit(5))
       .groupBy(col("a"), col("b"))
       .agg(max(col("c")).as("c"))
       .withColumn("w", expr("(1000 + c - 1) div c"))
@@ -1453,9 +1453,7 @@ object RelationalQueries {
          |    SELECT e.b AS node, p.d + e.w AS d
          |    FROM e0 e JOIN d${i - 1} p ON e.a = p.node)
          |  GROUP BY 1)""".stripMargin
-    s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem),
-       |w AS (SELECT a.sk AS x, b.sk AS y, count(*) AS c
-       |      FROM li a JOIN li b ON a.ok = b.ok AND a.sk <> b.sk GROUP BY 1, 2),
+    s"""$affinityCtes
        |topk AS (SELECT x, y, c FROM (
        |           SELECT x, y, c, row_number() OVER (
        |             PARTITION BY x ORDER BY c DESC, y) AS rn FROM w)
@@ -1481,9 +1479,7 @@ object RelationalQueries {
          |    SELECT e.b AS node, p.d + 1 AS d
          |    FROM e0 e JOIN d${i - 1} p ON e.a = p.node)
          |  GROUP BY 1)""".stripMargin
-    s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem),
-       |w AS (SELECT a.sk AS x, b.sk AS y, count(*) AS c
-       |      FROM li a JOIN li b ON a.ok = b.ok AND a.sk <> b.sk GROUP BY 1, 2),
+    s"""$affinityCtes
        |topk AS (SELECT x, y FROM (
        |           SELECT x, y, row_number() OVER (
        |             PARTITION BY x ORDER BY c DESC, y) AS rn FROM w)

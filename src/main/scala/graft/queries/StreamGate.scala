@@ -38,7 +38,16 @@ private[queries] object StreamGate {
   def run(s: SparkSession, tag: String, out: DataFrame, mode: String,
       sink: Sink = _.format("memory"), deliver: Seq[(Path, DataFrame)] = Nil,
       dataBatches: Int = -1): String = {
-    setStatePartitions(s, 4)
+    // A streaming query pins its STATE partitioning to
+    // spark.sql.shuffle.partitions at start, and every micro-batch then
+    // pays one state-store instance (for RocksDB: one native DB
+    // open/commit) per partition — at the gate's data scale, 32 partitions
+    // is pure overhead (measured 8.6 s → ~2 s). Gates pin 4, deterministic
+    // across 4- and 32-cpu hosts; state partition count is a
+    // per-deployment sizing knob, not a semantic (at cluster scale, size
+    // it to executors × cores). No restore: the conf lives on the gate's
+    // isolated child session, which no other query shares.
+    s.conf.set("spark.sql.shuffle.partitions", 4)
     val name = s"${tag}_${runSeq.incrementAndGet()}"
     val q = sink(out.writeStream.queryName(name).outputMode(mode)).start()
     try {
@@ -77,33 +86,16 @@ private[queries] object StreamGate {
       s"$tag expected exactly $merges merged batches, saw ${merged.get()}")
   }
 
-  /** Set the gate's state-partition count on its (child) session. A
-    * streaming query pins its STATE partitioning to
-    * `spark.sql.shuffle.partitions` at start, and every micro-batch then
-    * pays one state-store instance (for RocksDB: one native DB open/commit)
-    * per partition — at the gate's data scale, 32 partitions is pure
-    * overhead (measured 8.6 s → ~2 s). Gates pin 4, deterministic across
-    * 4- and 32-cpu hosts; state partition count is a per-deployment
-    * sizing knob, not a semantic (at cluster scale, size it to executors ×
-    * cores). No restore: the conf lives on the isolated child session,
-    * which no other query shares. `SPARK_GRAFT_STATE_PARTITIONS` overrides for scale probes (e.g. the r15
-    * state-depth-vs-starvation probe on `streaming_running_distinct` at
-    * 100 M events); unset in normal runs. */
-  private def setStatePartitions(s: SparkSession, n: Int): Unit =
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(n))
-
   /** Stop a gate's streaming query, first offering its last micro-batch
     * plan to the audit recorder (a volatile-read no-op outside
     * `graft.Inspect static` — see StreamPlanCapture), so PLANS.md can pin
     * streaming plans like batch ones.
     *
-    * `SPARK_GRAFT_STREAM_PROBE=1` (a measurement knob like
-    * `SPARK_GRAFT_STATE_PARTITIONS`; unset in normal runs) additionally
-    * prints each micro-batch's engine-reported durationMs breakdown
-    * (triggerExecution = whole batch; addBatch = plan+run+sink;
-    * walCommit/commitOffsets = offset/commit log fsyncs; getBatch/
-    * latestOffset = source), the direct evidence for where the
+    * `SPARK_GRAFT_STREAM_PROBE=1` (a measurement knob; unset in normal
+    * runs) additionally prints each micro-batch's engine-reported
+    * durationMs breakdown (triggerExecution = whole batch; addBatch =
+    * plan+run+sink; walCommit/commitOffsets = offset/commit log fsyncs;
+    * getBatch/latestOffset = source), the direct evidence for where the
     * machinery gap of a gate goes (guide §1: measure first). */
   private def drainStop(q: StreamingQuery): Unit = {
     graft.plans.StreamPlanCapture.record(q)

@@ -1,15 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Bfs
+import graft.operators.WeightedPaths
 
-/** Hand-graph pins for level-synchronous BFS hop distances. */
+/** Hand-graph pins for level-synchronous BFS hop distances — the
+  * unit-weight case of `WeightedPaths`. */
 class BfsSpec extends AnyFunSuite with SparkSpec {
 
   private def dists(edges: Seq[(Long, Long)], seed: Long,
                     maxRounds: Int = 10): Map[Long, Long] = {
     import spark.implicits._
-    Bfs.hopDistances(edges.toDF("a", "b"), seed, maxRounds)
+    WeightedPaths.hopDistances(edges.toDF("a", "b"), seed, maxRounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

@@ -268,6 +268,16 @@ class DedupSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
+  test("connectedComponents throws when the round budget is too small") {
+    // path 1-2-3-4-5: the seed labels node 3 with 2, so node 5 still
+    // needs more than one propagation round
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("d1", "d2")
+    val ex = intercept[IllegalArgumentException] {
+      DedupOps.connectedComponents(path, maxIter = 1)
+    }
+    assert(ex.getMessage.contains("did not reach a fixpoint within 1 rounds"))
+  }
+
   test("connectedComponents leaves a concurrent query's session conf and plans untouched") {
     // regression: the loop used to mutate spark.sql.shuffle.partitions
     // session-wide for its duration, so any query another thread planned

@@ -12,12 +12,19 @@ import graft.sources.Tables
 class EditDistanceJoinSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Every pair's exact Levenshtein distance, filtered to ≤ k. Only pairs
+    * with |len a − len b| ≤ k are compared: the distance is at least the
+    * length difference, so the rest can never pass the filter. Each `a`
+    * row explodes its length band len ± k and equi-joins `b` on length, so
+    * every in-band pair meets exactly once. */
   private def bruteForce(df: org.apache.spark.sql.DataFrame, k: Int) = {
     val a = df.select(col("doc_id").as("ida"), col("text").as("ta"))
       .filter(length(col("ta")) >= k + 1)
+      .withColumn("band", explode(sequence(
+        length(col("ta")) - k, length(col("ta")) + k)))
     val b = df.select(col("doc_id").as("idb"), col("text").as("tb"))
       .filter(length(col("tb")) >= k + 1)
-    a.crossJoin(b).filter(col("ida") < col("idb"))
+    a.join(b, col("band") === length(col("tb")) && col("ida") < col("idb"))
       .withColumn("d", levenshtein(col("ta"), col("tb")))
       .filter(col("d") <= k)
       .select(col("ida").as("doc_id_lo"), col("idb").as("doc_id_hi"),

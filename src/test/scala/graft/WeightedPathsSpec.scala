@@ -37,4 +37,16 @@ class WeightedPathsSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("fixpoint"))
   }
+
+  test("a seed with no edges is its own whole answer, hop and weighted") {
+    // the observed seed already reads (count 1, Σd 0), so round 1 is the
+    // stability round even with a one-round budget
+    val e = Seq((8L, 9L, 3L)).toDF("a", "b", "w")
+    val weighted = WeightedPaths.shortestDistances(e, 1L, maxRounds = 1)
+      .as[(Long, Long)].collect().toSeq
+    val hops = WeightedPaths.hopDistances(e.select($"a", $"b"), 1L, 1)
+      .as[(Long, Long)].collect().toSeq
+    assert(weighted == Seq((1L, 0L)))
+    assert(hops == Seq((1L, 0L)))
+  }
 }
