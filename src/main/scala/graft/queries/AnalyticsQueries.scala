@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.streaming.SessionFunnelState.{funnelWalk, walkEvents}
 
 /** Sequence analytics + robust statistics over the `events` table —
   * round-8 additions to the product-analytics family (funnels, Markov
@@ -1332,11 +1333,9 @@ object AnalyticsQueries {
     * 1e-6 floor division. Scale shape: one per-user window, then ONE
     * groupBy reduces straight to (user, session) cardinality — the
     * ordered funnel runs as a sorted-array state-machine walk INSIDE
-    * that aggregate (min-view, then min-click strictly after it, then
-    * min-purchase strictly after that: walking events in (us, event_id)
-    * order and taking the first qualifying event per stage IS the
-    * conditional-min chain, because each stage's predicate depends only
-    * on us). No event-cardinality relation is checkpointed or consumed
+    * that aggregate (`SessionFunnelState.funnelWalk`, null-seeded — the
+    * same walk the streaming funnels continue from their state). No
+    * event-cardinality relation is checkpointed or consumed
     * twice — round 9's multi-join form re-read a cached sessionized
     * relation five times, the storageFraction-floor family at 100x;
     * this is the single-pass conditional aggregate. Per-group state is
@@ -1356,23 +1355,8 @@ object AnalyticsQueries {
       .withColumn("sidx", sum(coalesce(col("is_break"), lit(0L))).over(wRun))
     val perSession = sess.groupBy(col("user_id"), col("sidx"))
       .agg(count(lit(1)).as("n_events"), min(col("us")).as("min_us"),
-        expr("""aggregate(
-            array_sort(collect_list(struct(us, event_id, event_type))),
-            named_struct('t1', cast(null as bigint),
-                         't2', cast(null as bigint),
-                         't3', cast(null as bigint)),
-            (st, e) -> named_struct(
-              't1', CASE WHEN st.t1 IS NULL AND e.event_type = 'view'
-                         THEN e.us ELSE st.t1 END,
-              't2', CASE WHEN st.t2 IS NULL AND st.t1 IS NOT NULL
-                          AND e.event_type = 'click' AND e.us > st.t1
-                         THEN e.us ELSE st.t2 END,
-              't3', CASE WHEN st.t3 IS NULL AND st.t2 IS NOT NULL
-                          AND e.event_type = 'purchase' AND e.us > st.t2
-                         THEN e.us ELSE st.t3 END),
-            st -> CASE WHEN st.t3 IS NOT NULL
-                       THEN cast(1 as bigint) ELSE cast(0 as bigint) END)""")
-          .as("conv"))
+        when(funnelWalk(walkEvents(col("us")))("t3").isNotNull, 1L)
+          .otherwise(0L).as("conv"))
     val wU = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
     perSession

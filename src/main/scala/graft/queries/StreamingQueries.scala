@@ -970,15 +970,15 @@ object StreamingQueries {
     * run through the versioned foreachBatch state sink and gated against
     * the batch funnel oracle VERBATIM (the `streaming_cdc_upsert`
     * pattern): per-user funnel state (t1, t2, t3) merges with each
-    * micro-batch's conditional-min chain, where each step's batch
-    * candidates are filtered against the step-(k−1) time AS MERGED THIS
-    * BATCH (so view→click inside one batch converts, and a click
-    * delivered before any view can never convert — order semantics
-    * preserved incrementally; batches are time-split, so a later batch
-    * can only APPEND to the timeline, which is what makes the funnel
-    * recurrence mergeable). Per batch: three batch-sized conditional
-    * aggregates + key-cardinality joins against state — cost ∝ batch +
-    * touched users, never a history re-scan. */
+    * micro-batch in one pass — the batch's events collect per user, join
+    * the state once, and continue the state's funnel walk
+    * (`SessionFunnelState.funnelWalk`, keyed by user instead of session).
+    * So view→click inside one batch converts, and a click delivered
+    * before any view can never convert — order semantics preserved
+    * incrementally; batches are time-split, so a later batch can only
+    * APPEND to the timeline, which is what makes the walk mergeable. Per
+    * batch: one batch-sized aggregate + one key-cardinality join against
+    * state — cost ∝ batch + touched users, never a history re-scan. */
   private val streamingFunnel: Q = (s, dir) => {
     val (tmp, frames, batch2) = midpointSplit(s, dir, "sfunnel",
       "user_id", "event_id", "ts", "event_type")
@@ -988,33 +988,19 @@ object StreamingQueries {
     var current: Option[String] = None
     StreamGate.versioned(s, "streaming_funnel", frames, batch2,
         merges = 2) { (df, id) =>
+      import graft.streaming.SessionFunnelState.{funnelWalk, walkEvents}
       val st = current.map(s.read.parquet(_)).getOrElse(
         s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           stateSchema))
-      val b1 = df.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("bt1"))
-      // least() skips nulls: an unreached step stays null until its
-      // first candidate, then only ever decreases (it can't — later
-      // batches carry later times; least() makes that explicit)
-      val s1 = st.join(b1, Seq("user_id"), "full_outer")
-        .select(col("user_id"), least(col("t1"), col("bt1")).as("t1"),
-          col("t2"), col("t3"))
-      val b2 = df.filter(col("event_type") === "click")
-        .join(s1.select(col("user_id"), col("t1")), "user_id")
-        .filter(col("ts") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("bt2"))
-      val s2 = s1.join(b2, Seq("user_id"), "left")
-        .select(col("user_id"), col("t1"),
-          least(col("t2"), col("bt2")).as("t2"), col("t3"))
-      val b3 = df.filter(col("event_type") === "purchase")
-        .join(s2.select(col("user_id"), col("t2")), "user_id")
-        .filter(col("ts") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("bt3"))
-      val s3 = s2.join(b3, Seq("user_id"), "left")
-        .select(col("user_id"), col("t1"), col("t2"),
-          least(col("t3"), col("bt3")).as("t3"))
+      // a user with no view yet holds no funnel state
+      val merged = st.join(df.groupBy(col("user_id"))
+          .agg(walkEvents(col("ts")).as("evs")), Seq("user_id"), "full_outer")
+        .select(col("user_id"),
+          funnelWalk(col("evs"), col("t1"), col("t2"), col("t3")).as("w"))
+        .select(col("user_id"), col("w.*"))
+        .filter(col("t1").isNotNull)
       val out = tmp.resolve(s"state_v$id").toString
-      s3.write.mode("overwrite").parquet(out)
+      merged.write.mode("overwrite").parquet(out)
       current = Some(out)
     }
     val st = s.read.parquet(current.get)
@@ -1043,12 +1029,13 @@ object StreamingQueries {
     * at the batch boundary continues, and a > 30 min boundary gap opens
     * session last_sidx + 1); batches are time-split, so a later batch
     * only ever APPENDS to each user's timeline — the recurrence that
-    * makes both the sessionizer and the in-session conditional-min
-    * funnel mergeable (each step's batch candidates filter against the
-    * step-(k−1) time AS MERGED THIS BATCH — the `streaming_funnel`
-    * order argument, per session key). Per batch: one batch-sized
-    * window + key-cardinality joins against state; the final cohort
-    * rollup reads state relations only. */
+    * makes both the sessionizer and the in-session funnel walk
+    * mergeable (each key's batch events continue the walk from the
+    * state's step times — the `streaming_funnel` order argument, per
+    * session key). Per batch, one pass (SessionFunnelState.mergeBatch):
+    * one batch-sized window, one (user, session) aggregate, and one
+    * key-cardinality join per state relation; the final cohort rollup
+    * reads state relations only. */
   private val streamingSessionsFunnel: Q = (s, dir) => {
     val (tmp, frames, batch2) = midpointSplit(s, dir, "ssessfunnel",
       "user_id", "event_id", "ts", "event_type")

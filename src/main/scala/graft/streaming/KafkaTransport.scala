@@ -71,8 +71,11 @@ object KafkaTransport {
   def readLogFrames(spark: SparkSession, cfg: SourceConfig): DataFrame =
     frames(readRaw(spark, cfg))
 
-  /** Writer for (key, value) records to a topic; exactly-once via the
-    * checkpoint (the Spark analogue of the reference's changelog+offsets).
+  /** Writer for (key, value) records to a topic. Spark's Kafka sink is
+    * AT-LEAST-ONCE: the checkpoint (the Spark analogue of the reference's
+    * changelog+offsets) restores state and offsets, but a batch replayed
+    * after a crash re-sends its records. In append mode each window key
+    * carries exactly one value, so consumers dedupe by key.
     */
   def writer(records: DataFrame, cfg: SinkConfig): DataStreamWriter[Row] =
     records.writeStream.format("kafka")

@@ -613,7 +613,9 @@ object EngineProperties extends Properties("engine") {
   private val genSfEvents: Gen[List[SfEv]] =
     Gen.listOfN(150, for {
       uid <- Gen.choose(1L, 10L)
-      ts  <- Gen.choose(0L, 3L * 3600000000L) // 3 h span in µs → real gaps
+      // 3 h span on a 1-minute grid (µs): real > 30 min gaps, and equal
+      // ts within a user, which the walk must order by event_id
+      ts  <- Gen.choose(0L, 180L).map(_ * 60000000L)
       et  <- Gen.oneOf("view", "click", "purchase", "scroll")
     } yield (uid, ts, et)).map(_.zipWithIndex.map {
       case ((u, t, e), i) => SfEv(u, i.toLong, t, e)

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * index" table) must stay complete: a user mapping the registry's gate
   * names to public API entry points relies on it. Two pins:
   *  (1) index keys == registry keys EXACTLY (no drift either way);
-  *  (2) every gate name appears in README.md (the rendered table is
-  *      refreshed with `sbt "runMain graft.OperatorIndex"`).
+  *  (2) every gate name appears in README.md, and README's table is
+  *      exactly what `sbt "runMain graft.OperatorIndex"` prints.
   */
 class OperatorIndexSpec extends AnyFunSuite {
 
@@ -22,14 +22,26 @@ class OperatorIndexSpec extends AnyFunSuite {
       s"index out of sync with registry — missing=$missing extra=$extra")
   }
 
+  private lazy val readme: String = new String(java.nio.file.Files.readAllBytes(
+    java.nio.file.Paths.get("README.md")), java.nio.charset.StandardCharsets.UTF_8)
+
   test("README lists every registry gate in the operator index table") {
-    val readme = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("README.md")))
     val missing = Queries.all.keySet
       .filterNot(n => readme.contains(s"`$n`"))
     assert(missing.isEmpty,
       s"README operator index is missing gates (re-run " +
         s"`sbt \"runMain graft.OperatorIndex\"` and refresh the table): " +
         missing.toSeq.sorted.mkString(", "))
+  }
+
+  test("README's operator index table is OperatorIndex's output, byte for byte") {
+    val lines = readme.split("\n", -1).toSeq
+    val rendered = lines.dropWhile(_ != OperatorIndex.table.head)
+      .takeWhile(_.startsWith("|"))
+    assert(rendered == OperatorIndex.table,
+      "README operator index differs from OperatorIndex (re-run " +
+        "`sbt \"runMain graft.OperatorIndex\"` and paste its output): " +
+        rendered.zipAll(OperatorIndex.table, "<none>", "<none>")
+          .find { case (r, t) => r != t }.mkString)
   }
 }

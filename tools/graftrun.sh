@@ -12,7 +12,10 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-XMX="-Xmx${SPARK_DRIVER_MEM:-48g}"
+# default heap: half of MemTotal clamped to 2–8 g, the SPARK_DRIVER_MEM
+# sizing of the tier-1 test run; SPARK_DRIVER_MEM or a leading -Xmx overrides
+HALF_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
+XMX="-Xmx${SPARK_DRIVER_MEM:-$HALF_MEM}"
 if [[ "${1:-}" == -Xmx* ]]; then XMX="$1"; shift; fi
 exec java $OPENS $XMX \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
