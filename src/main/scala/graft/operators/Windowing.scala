@@ -19,14 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Windowing {
 
-  /** Tumbling window counts per key. */
-  def tumblingCounts(df: DataFrame, eventTime: Column, width: String,
-                     keys: Column*): DataFrame =
-    df.groupBy((window(eventTime, width).as("w") +: keys): _*)
-      .agg(count(lit(1)).as("n_events"))
-      .withColumn("window_start", unix_timestamp(col("w.start")))
-      .drop("w")
-
   /** Sliding window event + distinct-id counts. Batch form; the streaming
     * form swaps count_distinct for dropDuplicates+count (SURVEY §7 risk 2).
     */

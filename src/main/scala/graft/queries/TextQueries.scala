@@ -16,7 +16,6 @@ object TextQueries {
   private val ShingleN   = 3
   private val NumHashes  = 16
   private val Bands      = 8
-  private val RowsPerBand = NumHashes / Bands
   private val Threshold  = 0.8
 
   // ── token statistics ───────────────────────────────────────────────────

@@ -58,14 +58,4 @@ object StatefulDedup {
           }
       }
   }
-
-  /** Batch-checkable form used by tests and Verify: dedup a batch Dataset
-    * with the same keying (groupByKey → first) — semantics identical when
-    * all data is on time. */
-  def firstSeenBatch(ds: Dataset[Keyed]): Dataset[Keyed] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(k => (k.bucket, k.uid)).reduceGroups((a, b) =>
-      if (a.eventTimeMs <= b.eventTimeMs) a else b).map(_._2)
-  }
 }

@@ -31,11 +31,4 @@ object TimeOps {
     * `timestamp_seconds` is the declarative equivalent).
     */
   def fromEpochSeconds(ts: Column): Column = timestamp_seconds(ts)
-
-  /** Fixed-width bucket of arbitrary width in seconds, as epoch seconds.
-    * Used to express tumbling/sliding windows in an oracle-friendly integer
-    * domain: `floor(epoch(ts)/width)*width`.
-    */
-  def bucketEpoch(eventTime: Column, widthSeconds: Long): Column =
-    (floor(unix_timestamp(eventTime) / widthSeconds) * widthSeconds).cast("long")
 }

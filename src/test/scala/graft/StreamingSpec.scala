@@ -251,7 +251,7 @@ class StreamingSpec extends SparkSpec {
     // (every scale probe's input) write a multi-part DIRECTORY. The
     // sentinel-flush gates must stage either layout — a single Files.copy
     // silently produced an EMPTY first batch on the directory layout
-    // (found by the 10x streaming probe; stageEventsAsBatch1 is the fix).
+    // (found by the 10x streaming probe; StreamGate.fixtureFeed is the fix).
     val dir = java.nio.file.Files.createTempDirectory("graft_dirfx_").toString
     val tsConf = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.get(tsConf)
