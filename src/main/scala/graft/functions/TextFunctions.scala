@@ -74,6 +74,16 @@ object TextFunctions {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text),
         n, NGramHashB, NGramHashP))
 
+  /** All word-n-gram shingle hashes of `text` as array<long> — one
+    * codegen'd pass (see WordShingleHashes), bit-identical to
+    * `shingleHash40` over the exploded `shinglesOf` strings. The word
+    * counterpart of `charNGramHashes`: the row-local feature
+    * representation for word-shingle MinHash/Jaccard dedup. */
+  def wordShingleHashes(text: Column, n: Int): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      WordShingleHashes(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(text), n))
+
   /** 1-based char positions where a width-n window hash ≡ 0 (mod m) ends
     * — the CDC cut rule, fused hash+filter in one codegen'd pass (see
     * CdcCutPositions). */

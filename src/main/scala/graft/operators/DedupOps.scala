@@ -11,16 +11,19 @@ import graft.functions.TextFunctions
   * Scale design (100 TB):
   *  - exact/word-set dedup: one hash-shuffle on a 128-bit fingerprint —
   *    the canonical map-side-combinable groupBy.
-  *  - MinHash signatures: one pass over exploded shingles, all k min()
-  *    aggregates computed in a single hash aggregate (no k passes).
+  *  - MinHash+LSH has one path, row-local: each doc's hashed features
+  *    ride in its row (`wordShingleHashes` / `charShingleHashes`), and
+  *    one codegen'd kernel per doc folds all k permutation minima into
+  *    its band keys (`bandKeys`) — no explode, no signature aggregate.
   *  - LSH banding: candidate generation is a self-equi-join on
-  *    (band, band_hash) — a shuffle join on a short key whose fan-out is
-  *    controlled by band width; never an all-pairs product.
-  *  - verification: exact Jaccard only over candidate pairs (broadcast the
-  *    candidate list when small; shuffle-join on doc_id otherwise).
+  *    (band, band_hash) — a shuffle join on an 8-byte key whose fan-out
+  *    is controlled by band width; never an all-pairs product.
+  *  - verification: exact Jaccard only over candidate pairs, by
+  *    array_intersect of the two docs' feature sets.
   *
-  * Hash functions are md5-hex-based so the "random permutations" are
-  * deterministic and engine-portable (same values in the DuckDB oracle).
+  * Feature hashes and the permutation family are md5-prefix and modular
+  * arithmetic, so the "random permutations" are deterministic and
+  * engine-portable (same values in the DuckDB oracle).
   */
 object DedupOps {
 
@@ -57,19 +60,6 @@ object DedupOps {
   def shingleSet(docs: DataFrame, idCol: Column, textCol: Column, n: Int): DataFrame =
     shingleBag(docs, idCol, textCol, n).distinct()
 
-  /** Character-n-gram feature bag (id, g), duplicates included — the
-    * n-gram-Jaccard counterpart of the word `shingleBag`; one codegen'd
-    * transform + explode, no shuffle. */
-  def charShingleBag(docs: DataFrame, idCol: Column, textCol: Column, n: Int): DataFrame =
-    FanOut.bySize(docs.select(idCol.as("doc_id"), textCol.as("t")),
-        col("doc_id"))
-      .select(col("doc_id"),
-        explode(TextFunctions.charShingles(col("t"), n)).as("g"))
-
-  /** Distinct character-n-gram features (set semantics for Jaccard). */
-  def charShingleSet(docs: DataFrame, idCol: Column, textCol: Column, n: Int): DataFrame =
-    charShingleBag(docs, idCol, textCol, n).distinct()
-
   /** MinHash permutation family h_i(x) = (a_i * x + b_i) mod P over a
     * 40-bit base hash x = int(md5(shingle)[0:10 hex]). ONE md5 per shingle
     * row (not one per permutation — 16× fewer digests) and the min-agg
@@ -105,30 +95,11 @@ object DedupOps {
     min((lit(mhA(i)) * col("h") + lit(mhB(i))) % lit(MinHashP)).as(s"mh$i")
 
   /** MinHash signatures: `numHashes` columns mh0..mhN computed in ONE hash
-    * aggregate over the shingle relation. */
+    * aggregate over the (doc_id, g) shingle relation. */
   def minHashSignatures(shingles: DataFrame, numHashes: Int): DataFrame =
-    minHashSignaturesFromHashes(
-      shingles.select(col("doc_id"), shingleHash40(col("g")).as("h")), numHashes)
-
-  /** Signature aggregate over an already-hashed (doc_id, h) relation —
-    * the entry point when the caller pre-hashed features to 40-bit longs
-    * (so the md5 is computed once per feature row, not once per consumer). */
-  def minHashSignaturesFromHashes(hashed: DataFrame, numHashes: Int): DataFrame =
-    hashed.groupBy(col("doc_id"))
+    shingles.select(col("doc_id"), shingleHash40(col("g")).as("h"))
+      .groupBy(col("doc_id"))
       .agg(mhExpr(0), (1 until numHashes).map(mhExpr): _*)
-
-  /** LSH banding: (doc_id, band, band_hash) — band b hashes rows
-    * [b*rowsPerBand, (b+1)*rowsPerBand). */
-  def lshBands(signatures: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandStructs = (0 until bands).map { b =>
-      val rows = (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"),
-        md5(concat_ws("|", rows: _*)).as("band_hash"))
-    }
-    signatures.select(col("doc_id"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
-  }
 
   /** Candidate pairs: docs sharing at least one band bucket (d1 < d2).
     *
@@ -174,77 +145,6 @@ object DedupOps {
     pairsSmall.union(pairsBig).distinct()
   }
 
-  /** Exact Jaccard over given pairs, via one equi-join on the shingle and a
-    * count aggregate — never materializes per-doc sets in memory. */
-  def jaccardOverPairs(pairs: DataFrame, shingles: DataFrame): DataFrame = {
-    val sizes = shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(shingles.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(shingles.as("s2"),
-        col("d2") === col("s2.doc_id") && col("s1.g") === col("s2.g"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.as("z1"), col("d1") === col("z1.doc_id"))
-      .join(sizes.as("z2"), col("d2") === col("z2.doc_id"))
-      .select(col("d1"), col("d2"),
-        round(col("inter").cast("double") /
-          (col("z1.n") + col("z2.n") - col("inter")), 6).as("jaccard"))
-  }
-
-  /** Full MinHash+LSH near-dup pipeline: shingle → sign → band → candidate
-    * → exact-verify ≥ threshold. */
-  /** `persistShingles`: the shingle relation feeds BOTH branches
-    * (signatures → candidates, and exact verification). At 100 TB persist
-    * (or checkpoint) it — one corpus pass instead of two. At small scale
-    * leave it off: the InMemoryRelation pins partitioning and blocks AQE
-    * coalescing, which costs more than the second tiny scan (measured 3.5×
-    * slower on the 500-doc bench). */
-  def minHashLshPairs(docs: DataFrame, idCol: Column, textCol: Column,
-                      shingleN: Int, numHashes: Int, bands: Int,
-                      threshold: Double, persistShingles: Boolean = false,
-                      maxBucket: Int = Int.MaxValue): DataFrame =
-    lshPairsOverShingles(
-      shingleBag(docs, idCol, textCol, shingleN),
-      shingleSet(docs, idCol, textCol, shingleN),
-      numHashes, bands, threshold, persistShingles, maxBucket)
-
-  /** The shingle-source-agnostic core of the MinHash+LSH pipeline: any
-    * (doc_id, g) feature relation works — word shingles, char n-grams,
-    * hashed tokens. `bag` may carry duplicates (signatures are min-based);
-    * `set` must be distinct (it defines the Jaccard).
-    *
-    * `persistSet = true` EAGERLY materializes the distinct set at call
-    * time (localCheckpoint computes immediately, unlike the lazy cache
-    * hint `persist` gave) — the blocks are GC/ContextCleaner-released
-    * but not recoverable on executor loss, so it is a local-mode /
-    * reliable-storage-backed optimization, not a lazy hint. */
-  def lshPairsOverShingles(bag: DataFrame, set: DataFrame,
-                           numHashes: Int, bands: Int, threshold: Double,
-                           persistSet: Boolean = false,
-                           maxBucket: Int = Int.MaxValue,
-                           preHashed: Boolean = false): DataFrame = {
-    require(numHashes == bands * (numHashes / bands), "bands must divide numHashes")
-    // signatures read the shuffle-free bag (min is duplicate-insensitive);
-    // only the Jaccard verification needs the distinct set.
-    // preHashed: `g` already holds the 40-bit feature hash (long) — the
-    // verify join then shuffles an 8-byte key instead of the raw feature
-    // string, and the md5 is computed once per feature upstream. Jaccard
-    // is then over hash-distinct features: identical to string-distinct
-    // up to 40-bit collisions, and the oracle applies the SAME hash, so
-    // both engines see the same (collided) sets.
-    val sig = if (preHashed)
-      minHashSignaturesFromHashes(bag.select(col("doc_id"), col("g").as("h")), numHashes)
-    else minHashSignatures(bag, numHashes)
-    // opt-in one-pass materialization of the distinct set via eager
-    // local checkpoint — unlike Dataset.persist, checkpoint blocks hold
-    // no CacheManager entry and are released by the ContextCleaner once
-    // the result is unreachable, so the opt-in cannot leak session-wide
-    val sh = if (persistSet) set.localCheckpoint() else set
-    val cand = lshCandidates(lshBands(sig, bands, numHashes / bands), maxBucket)
-    jaccardOverPairs(cand, sh).filter(col("jaccard") >= threshold)
-  }
-
   /** Per-doc hashed word-n-gram shingle arrays (doc_id, hs: array<long>)
     * — the word-feature counterpart of `charShingleHashes`: one codegen'd
     * kernel pass (WordShingleHashes, bit-identical to the exploded
@@ -257,10 +157,7 @@ object DedupOps {
     FanOut.bySize(docs.select(idCol.as("doc_id"), textCol.as("t")),
         col("doc_id"))
       .select(col("doc_id"),
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          graft.functions.WordShingleHashes(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("t")), n))
-          .as("hs"))
+        TextFunctions.wordShingleHashes(col("t"), n).as("hs"))
 
   /** Per-doc hashed char-n-gram arrays (doc_id, hs: array<long>) — the
     * ROW-LOCAL feature representation: one codegen'd rolling-hash pass
@@ -277,10 +174,10 @@ object DedupOps {
   /** Exact Jaccard over candidate pairs with SET-VALUED doc rows: two
     * joins pull each side's distinct feature array onto the pair, then
     * size(array_intersect) computes the overlap row-locally. Shuffle
-    * volume is |candidate docs| feature arrays + |pairs| — compare
-    * `jaccardOverPairs`, which shuffles |pairs| × |avg set| exploded
-    * rows twice. Wins whenever docs appear in >1 pair (always, for
-    * near-dup clusters). */
+    * volume is |candidate docs| feature arrays + |pairs|, against
+    * |pairs| × |avg set| rows twice for a join over exploded features.
+    * Wins whenever docs appear in >1 pair (always, for near-dup
+    * clusters). */
   def jaccardOverPairsArrays(pairs: DataFrame, docSets: DataFrame): DataFrame =
     pairs.join(docSets.as("x1"), col("d1") === col("x1.doc_id"))
       .join(docSets.as("x2"), col("d2") === col("x2.doc_id"))
@@ -292,35 +189,43 @@ object DedupOps {
         round(col("inter").cast("double") /
           (col("n1") + col("n2") - col("inter")), 6).as("jaccard"))
 
-  /** LSH near-dup pipeline over row-local hashed feature arrays — the
-    * dense-feature (char-n-gram) counterpart of `lshPairsOverShingles`.
-    * Band keys come from ONE codegen'd kernel pass (MinHashBandKeys: all
-    * permutation minima + per-band arithmetic fold, 8-byte numeric join
-    * keys — see its scaladoc for why this beats the HOF + md5 band
-    * composition); per-doc sets are projections. The only shuffles are
-    * the band-bucket candidate self-join and the two verify joins, each
-    * bounded by candidate volume. The candidate relation feeds both the
-    * doc filter and the verify join → eagerly local-checkpointed here
-    * (≤ pairs-count rows; ContextCleaner-released, never a session-wide
-    * cache pin). Callers should materialize `hashed` only if it is
-    * expensive to rebuild (the CharNGramHashes pass usually isn't). */
+  /** The LSH band keys of one doc's hashed feature array `hs` (hashes
+    * < 2⁴⁰, as `wordShingleHashes`/`charShingleHashes` emit), as
+    * array<long> with one key per band: ONE MinHashBandKeys kernel pass
+    * folds the `numHashes` permutation minima (mhA/mhB mod MinHashP) into
+    * `bands` arithmetic band keys (8-byte numeric join keys — see its
+    * scaladoc for why this beats the HOF + md5 band composition). The one
+    * place the permutation family and the band fold meet the kernel. */
+  def bandKeys(hs: Column, numHashes: Int, bands: Int): Column = {
+    import graft.functions.TextFunctions.{NGramHashB, NGramHashP}
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.functions.MinHashBandKeys(expression(hs),
+      (0 until numHashes).map(mhA), (0 until numHashes).map(mhB),
+      MinHashP, bands, NGramHashB, NGramHashP))
+  }
+
   /** (doc_id, band, band_hash) LSH band keys from a row-local hashed
-    * feature relation (doc_id, hs) — ONE MinHashBandKeys kernel pass;
+    * feature relation (doc_id, hs) — ONE `bandKeys` kernel pass;
     * docs with no features emit no keys. This is the relation an
     * INGESTION pipeline persists as its near-dup index (partition by
     * `band`: every probe is then a pruned equi-join). */
   def bandKeysArrayLocal(hashed: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes == bands * (numHashes / bands), "bands must divide numHashes")
-    import graft.functions.TextFunctions.{NGramHashB, NGramHashP}
-    val bandKeys = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.MinHashBandKeys(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("hs")),
-        (0 until numHashes).map(mhA), (0 until numHashes).map(mhB),
-        MinHashP, bands, NGramHashB, NGramHashP))
     hashed.filter(size(col("hs")) > 0)
-      .select(col("doc_id"), posexplode(bandKeys).as(Seq("band", "band_hash")))
+      .select(col("doc_id"),
+        posexplode(bandKeys(col("hs"), numHashes, bands)).as(Seq("band", "band_hash")))
   }
 
+  /** The MinHash+LSH near-dup pipeline over row-local hashed feature
+    * arrays (doc_id, hs): band keys (`bandKeysArrayLocal`) → candidate
+    * pairs (`lshCandidates`) → exact Jaccard ≥ `threshold`
+    * (`jaccardOverPairsArrays`); per-doc sets are projections. The only
+    * shuffles are the band-bucket candidate self-join and the two verify
+    * joins, each bounded by candidate volume. The candidate relation
+    * feeds both the doc filter and the verify join → eagerly
+    * local-checkpointed here (≤ pairs-count rows; ContextCleaner-released,
+    * never a session-wide cache pin). Callers should materialize `hashed`
+    * only if it is expensive to rebuild (the hash pass usually isn't). */
   def lshPairsArrayLocal(hashed: DataFrame, numHashes: Int, bands: Int,
                          threshold: Double,
                          maxBucket: Int = Int.MaxValue): DataFrame = {
@@ -391,34 +296,38 @@ object DedupOps {
           coalesce(col("_id_nb"), lit(0L)) === 0).as("keep"))
   }
 
-  /** Near-duplicate pairs by SimHash Hamming distance ≤ `maxDist`, via
-    * pigeonhole banding: the 16-bit hash splits into two 8-bit bands, and
-    * any pair within distance 1 differs in at most one band, so it
-    * collides exactly in the other — candidates are the union of two
-    * band-equality self-joins (each bucket |corpus|/256 docs on uniform
-    * hashes), never the all-pairs product. Same output as the quadratic
-    * scan, but the candidate stage is a shuffle join on a byte key that
-    * survives a 1000× corpus — PROVIDED the hash bits are near-uniform.
-    * On low-entropy corpora (tiny vocabulary → correlated bits) buckets
-    * degenerate toward the full corpus and `banded = false` (broadcast
-    * nested-loop + codegen'd hamming, fine to ~10⁴ docs) wins; measured
-    * 4× faster quadratic on the 5 k-doc synthetic fixture, which is why
-    * the gate query pins banded = false and DedupSpec pins
-    * banded-equals-quadratic equality. */
+  /** Near-duplicate pairs (d1, d2, hamming) by SimHash Hamming distance
+    * ≤ `maxDist`. `bits` picks the hash: 16 (`simHash16`, the
+    * oracle-visible width) or 64 (`simHash64`, the production width:
+    * 4 bands of 16 bits cover d ≤ 3).
+    *
+    * `banded = true` mines candidates by pigeonhole banding
+    * (`simHashBandedPairs` over `bands` bands): a pair within distance d
+    * < bands collides exactly in some band, so candidates are band-
+    * equality self-joins (each bucket |corpus|/2^(bits/bands) docs on
+    * uniform hashes), never the all-pairs product — the plan that
+    * survives a 1000× corpus, PROVIDED the hash bits are near-uniform.
+    * `banded = false` is the quadratic reference scan (broadcast
+    * nested-loop + codegen'd hamming, fine to ~10⁴ docs). On low-entropy
+    * corpora (tiny vocabulary → correlated bits) buckets degenerate
+    * toward the full corpus and the quadratic scan wins: measured 4×
+    * faster on the 5 k-doc synthetic fixture at 16 bits, which is why
+    * that gate pins banded = false. DedupSpec and EngineProperties pin
+    * banded ≡ quadratic. */
   def simHashNearPairs(docs: DataFrame, idCol: Column, textCol: Column,
-                       maxDist: Int = 1, banded: Boolean = true): DataFrame = {
-    require(maxDist <= 1, "2-band pigeonhole only covers hamming <= 1")
-    val sh = simHash16(docs, idCol, textCol)
-    if (!banded) {
-      val a = sh.select(col("doc_id").as("d1"), col("simhash").as("h1"))
-      val b = sh.select(col("doc_id").as("d2"), col("simhash").as("h2"))
-      return a.join(b, col("d1") < col("d2"))
-        .select(col("d1"), col("d2"),
-          graft.functions.BitOps.hamming64(col("h1"), col("h2"))
-            .cast("long").as("hamming"))
-        .filter(col("hamming") <= maxDist)
-    }
-    simHashBandedPairs(sh, bands = 2, maxDist = maxDist, bits = 16)
+                       bits: Int, maxDist: Int, bands: Int,
+                       banded: Boolean = true): DataFrame = {
+    require(bits == 16 || bits == 64, s"SimHash width must be 16 or 64, got $bits")
+    val sh = if (bits == 16) simHash16(docs, idCol, textCol)
+      else simHash64(docs, idCol, textCol)
+    if (banded) return simHashBandedPairs(sh, bands, maxDist, bits)
+    val a = sh.select(col("doc_id").as("d1"), col("simhash").as("h1"))
+    val b = sh.select(col("doc_id").as("d2"), col("simhash").as("h2"))
+    a.join(b, col("d1") < col("d2"))
+      .select(col("d1"), col("d2"),
+        graft.functions.BitOps.hamming64(col("h1"), col("h2"))
+          .cast("long").as("hamming"))
+      .filter(col("hamming") <= maxDist)
   }
 
   /** Pigeonhole-banded near-pair mining over ANY (doc_id, simhash)
@@ -474,26 +383,6 @@ object DedupOps {
         graft.functions.BitOps.hamming64(col("h1"), col("h2"))
           .cast("long").as("hamming"))
       .filter(col("hamming") <= maxDist)
-  }
-
-  /** 64-bit SimHash near-pairs at Hamming ≤ `maxDist` — the production
-    * near-dup configuration (the 16-bit variant trades width for a
-    * finite oracle; this one is the real thing). 4 bands of 16 bits
-    * cover d ≤ 3 by pigeonhole. `banded = false` is the quadratic
-    * reference plan for equality gating at fixture scale. */
-  def simHashNearPairs64(docs: DataFrame, idCol: Column, textCol: Column,
-                         maxDist: Int = 3, bands: Int = 4,
-                         banded: Boolean = true): DataFrame = {
-    val sh = simHash64(docs, idCol, textCol)
-    if (!banded) {
-      val a = sh.select(col("doc_id").as("d1"), col("simhash").as("h1"))
-      val b = sh.select(col("doc_id").as("d2"), col("simhash").as("h2"))
-      a.join(b, col("d1") < col("d2"))
-        .select(col("d1"), col("d2"),
-          graft.functions.BitOps.hamming64(col("h1"), col("h2"))
-            .cast("long").as("hamming"))
-        .filter(col("hamming") <= maxDist)
-    } else simHashBandedPairs(sh, bands, maxDist, bits = 64)
   }
 
   /** Connected components over an undirected pair relation (`d1`, `d2`) —

@@ -418,7 +418,7 @@ object AdvancedQueries {
   // bits correlate, so pigeonhole buckets degenerate (see DedupOps note)
   private val simhashNearPairs: Q = (s, dir) =>
     DedupOps.simHashNearPairs(Tables.documents(s, dir),
-      col("doc_id"), col("text"), maxDist = 1, banded = false)
+      col("doc_id"), col("text"), bits = 16, maxDist = 1, bands = 2, banded = false)
 
   private val simhashNearPairsSql = {
     // reuse the simhash oracle as a CTE, then pair on hamming distance
@@ -439,7 +439,7 @@ object AdvancedQueries {
   // proves they agree. PlanAuditSpec pins no-BNLJ on this one.
   private val simhashNearPairsBanded: Q = (s, dir) =>
     DedupOps.simHashNearPairs(Tables.documents(s, dir),
-      col("doc_id"), col("text"), maxDist = 1, banded = true)
+      col("doc_id"), col("text"), bits = 16, maxDist = 1, bands = 2, banded = true)
 
   // ── 64-bit SimHash, hamming ≤ 3, 4-band pigeonhole ─────────────────────
   // The production near-dup configuration (64 bits, d ≤ 3) — the 16-bit
@@ -447,8 +447,8 @@ object AdvancedQueries {
   // density; this one is what you run on a real corpus. Banded plan in
   // the gate; quadratic-equality is pinned in DedupSpec.
   private val simhash64NearPairsBanded: Q = (s, dir) =>
-    DedupOps.simHashNearPairs64(Tables.documents(s, dir),
-      col("doc_id"), col("text"), maxDist = 3, bands = 4, banded = true)
+    DedupOps.simHashNearPairs(Tables.documents(s, dir),
+      col("doc_id"), col("text"), bits = 64, maxDist = 3, bands = 4, banded = true)
 
   private val simhash64NearPairsSql = {
     val sums = (0 until 64).map { b =>

@@ -482,31 +482,16 @@ object StreamingQueries {
       |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
       |FROM events GROUP BY 1""".stripMargin
 
-  /** Row-local codegen'd shingle hashes / first-LSH-band key — the
+  /** `docs` with its shingle hashes `hs` and first-band key `band_key`
+    * (a doc with no shingle has no key and is dropped) — the row-local
     * in-stream near-dedup kernels, shared by `streaming_near_dedup` and
     * `pipeline_streaming_ingest`. */
-  private def hsOf(text: org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(graft.functions.WordShingleHashes(expression(text), NdShingleN))
-  }
-  private def bandKeyOf(hs: org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    import graft.operators.DedupOps
-    element_at(
-      column(graft.functions.MinHashBandKeys(expression(hs),
-        (0 until NdNumHashes).map(DedupOps.mhA),
-        (0 until NdNumHashes).map(DedupOps.mhB),
-        DedupOps.MinHashP, NdBands,
-        graft.functions.TextFunctions.NGramHashB,
-        graft.functions.TextFunctions.NGramHashP)), 1)
-  }
-
-  /** `docs` with its shingle hashes `hs` and first-band key `band_key`
-    * (a doc with no shingle has no key and is dropped). */
   private def withBandKey(docs: DataFrame): DataFrame =
-    docs.withColumn("hs", hsOf(col("text")))
+    docs.withColumn("hs",
+        graft.functions.TextFunctions.wordShingleHashes(col("text"), NdShingleN))
       .filter(size(col("hs")) > 0)
-      .withColumn("band_key", bandKeyOf(col("hs")))
+      .withColumn("band_key", element_at(
+        graft.operators.DedupOps.bandKeys(col("hs"), NdNumHashes, NdBands), 1))
 
   /** One doc per band key, the min doc_id (deterministic, oracle-replayed). */
   private def canonicalPerBandKey(docs: DataFrame): DataFrame =
@@ -601,16 +586,11 @@ object StreamingQueries {
     * band-0 pipeline over the union corpus, then the canonical originals
     * (`orig_canon`) and the planted near-dups (`plant`). */
   private lazy val nearDedupCtes = {
-    import graft.operators.DedupOps
     val rowsPerBand = NdNumHashes / NdBands
-    val mins = (0 until rowsPerBand).map(i =>
-      s"min((${DedupOps.mhA(i)} * g + ${DedupOps.mhB(i)}) % ${DedupOps.MinHashP}) AS mh$i")
-      .mkString(",\n      |       ").stripMargin
-    // band-0 arithmetic fold — the MinHashBandKeys contract, identical
-    // to minhash_lsh_pairs' arithBandKeys oracle form
-    import graft.functions.TextFunctions.{NGramHashB => FB, NGramHashP => FP}
-    val fold = (0 until rowsPerBand).foldLeft("CAST(0 AS BIGINT)")(
-      (acc, i) => s"((($acc) * $FB + mh$i) % $FP)")
+    // band 0 needs only the first rowsPerBand minima; its key is the
+    // MinHashBandKeys fold, the same oracle form as minhash_lsh_pairs'
+    val mins = TextQueries.minHashColsSql(rowsPerBand, "g", indent = 7)
+    val fold = TextQueries.bandKeySql(0, rowsPerBand)
     s"""WITH docs2 AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.DedupOps
@@ -735,9 +736,7 @@ object TextQueries {
     // starving under nested/parallel use (r15 advice)
     // 1. near-dup canonical keep
     val fCanon = Future(blocking {
-      val pairs = DedupOps.lshPairsArrayLocal(
-        DedupOps.wordShingleHashes(docs, col("doc_id"), col("text"), ShingleN),
-        NumHashes, Bands, Threshold)
+      val pairs = wordLshPairs(docs)
       val labels = DedupOps.connectedComponents(pairs.select(col("d1"), col("d2")))
       DedupOps.canonicalPerCluster(labels, docs,
           col("doc_id"), octet_length(col("text")).cast("long"))
@@ -1279,7 +1278,7 @@ object TextQueries {
        |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS h
        |       FROM dt),
        |sig AS MATERIALIZED (SELECT doc_id,
-       |        ${(0 until NumHashes).map(i => s"min((${DedupOps.mhA(i)} * h + ${DedupOps.mhB(i)}) % ${DedupOps.MinHashP}) AS mh$i").mkString(",\n        ")}
+       |        ${minHashColsSql(NumHashes, "h")}
        |        FROM dh GROUP BY doc_id)""".stripMargin
 
   private val minhashSignatures: Q = (s, dir) =>
@@ -1307,40 +1306,53 @@ object TextQueries {
        |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS g
        |       FROM sh WHERE g IS NOT NULL),
        |sig AS MATERIALIZED (SELECT doc_id,
-       |        ${(0 until NumHashes).map(i => s"min((${DedupOps.mhA(i)} * g + ${DedupOps.mhB(i)}) % ${DedupOps.MinHashP}) AS mh$i").mkString(",\n        ")}
+       |        ${minHashColsSql(NumHashes, "g")}
        |        FROM dt GROUP BY doc_id)""".stripMargin
 
-  // Row-local array pipeline (WordShingleHashes kernel + MinHashBandKeys
-  // band keys): the corpus is never exploded; same verified output as the
-  // exploded `minHashLshPairs` (kept for the signature gate and the
-  // hot-bucket spec), ~3× faster end-to-end.
-  private val minhashLshPairs: Q = (s, dir) =>
+  /** The word-shingle MinHash-LSH near-dup pairs (d1, d2, jaccard) at the
+    * gate parameters — one row-local pass (WordShingleHashes kernel +
+    * MinHashBandKeys band keys), the corpus never exploded. The pair
+    * relation `minhash_lsh_pairs` gates, and the one the cluster,
+    * canonical, split and curation queries build on. */
+  private def wordLshPairs(docs: DataFrame): DataFrame =
     DedupOps.lshPairsArrayLocal(
-      DedupOps.wordShingleHashes(Tables.documents(s, dir),
-        col("doc_id"), col("text"), ShingleN),
+      DedupOps.wordShingleHashes(docs, col("doc_id"), col("text"), ShingleN),
       NumHashes, Bands, Threshold)
+
+  private val minhashLshPairs: Q = (s, dir) =>
+    wordLshPairs(Tables.documents(s, dir))
+
+  /** Oracle SQL for the first `n` MinHash signature columns over the
+    * feature column `g`: `min((a_i * g + b_i) % P) AS mh<i>`, one per
+    * line, continuation lines indented by `indent` spaces — DedupOps'
+    * permutation family replayed in DuckDB. */
+  private[queries] def minHashColsSql(n: Int, g: String, indent: Int = 8): String =
+    (0 until n).map(i =>
+      s"min((${DedupOps.mhA(i)} * $g + ${DedupOps.mhB(i)}) % ${DedupOps.MinHashP}) AS mh$i")
+      .mkString(",\n" + " " * indent)
+
+  /** Oracle SQL for band `b`'s key: the MinHashBandKeys arithmetic fold
+    * over the band's `rowsPerBand` signature columns, in order. */
+  private[queries] def bandKeySql(b: Int, rowsPerBand: Int): String = {
+    import graft.functions.TextFunctions.{NGramHashB => FB, NGramHashP => FP}
+    (0 until rowsPerBand).foldLeft("CAST(0 AS BIGINT)")((acc, r) =>
+      s"((($acc) * $FB + mh${b * rowsPerBand + r}) % $FP)")
+  }
+
+  /** The `bands` CTE body: one (doc_id, band, band_hash) row per doc and
+    * band, read from the `sig` CTE. */
+  private def bandSelectsSql(bands: Int): String =
+    (0 until bands).map(b =>
+      s"SELECT doc_id, $b AS band, ${bandKeySql(b, NumHashes / bands)} AS band_hash FROM sig")
+      .mkString("\n  UNION ALL ")
 
   /** The band→candidate→exact-Jaccard oracle tail, shared by the word-
     * shingle and char-n-gram variants: works over any CTE prefix defining
     * `dt` (distinct (doc_id, g) features) and `sig` (minhash columns). */
-  private def lshPairsSqlOver(ctes: String, bands: Int = Bands,
-                              arithBandKeys: Boolean = false): String = {
-    val rowsPerBand = NumHashes / bands
-    val bandSelects = (0 until bands).map { b =>
-      val cols = (0 until rowsPerBand).map(r => s"mh${b * rowsPerBand + r}")
-      // arithmetic band keys mirror MinHashBandKeys' fold (the array-
-      // local pipeline); the md5 concat form mirrors lshBands (exploded)
-      val key =
-        if (arithBandKeys) {
-          import graft.functions.TextFunctions.{NGramHashB => FB, NGramHashP => FP}
-          cols.foldLeft("CAST(0 AS BIGINT)")((acc, c) =>
-            s"((($acc) * $FB + $c) % $FP)")
-        } else s"md5(${cols.mkString(" || '|' || ")})"
-      s"SELECT doc_id, $b AS band, $key AS band_hash FROM sig"
-    }.mkString("\n  UNION ALL ")
+  private def lshPairsSqlOver(ctes: String, bands: Int): String =
     s"""$ctes,
        |bands AS MATERIALIZED (
-       |  $bandSelects),
+       |  ${bandSelectsSql(bands)}),
        |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
        |         FROM bands a JOIN bands b
        |           ON a.band = b.band AND a.band_hash = b.band_hash
@@ -1355,10 +1367,8 @@ object TextQueries {
        |       round(CAST(inter AS DOUBLE) / (n1 + n2 - inter), 6) AS jaccard
        |FROM inter
        |WHERE round(CAST(inter AS DOUBLE) / (n1 + n2 - inter), 6) >= $Threshold""".stripMargin
-  }
 
-  private val minhashLshPairsSql =
-    lshPairsSqlOver(shingleCtesHashed, Bands, arithBandKeys = true)
+  private val minhashLshPairsSql = lshPairsSqlOver(shingleCtesHashed, Bands)
 
   // ── char-n-gram Jaccard near-dup pairs ─────────────────────────────────
   // Same MinHash+LSH skeleton over character 5-grams instead of word
@@ -1397,7 +1407,7 @@ object TextQueries {
        |       FROM ch WINDOW win AS (PARTITION BY doc_id ORDER BY i)),
        |dt AS MATERIALIZED (SELECT DISTINCT doc_id, g FROM wh WHERE g IS NOT NULL),
        |sig AS MATERIALIZED (SELECT doc_id,
-       |        ${(0 until NumHashes).map(i => s"min((${DedupOps.mhA(i)} * g + ${DedupOps.mhB(i)}) % ${DedupOps.MinHashP}) AS mh$i").mkString(",\n        ")}
+       |        ${minHashColsSql(NumHashes, "g")}
        |        FROM dt GROUP BY doc_id)""".stripMargin
 
   private val ngramJaccardPairs: Q = (s, dir) => {
@@ -1415,7 +1425,7 @@ object TextQueries {
   }
 
   private val ngramJaccardPairsSql =
-    lshPairsSqlOver(charShingleCtes, CharLshBands, arithBandKeys = true)
+    lshPairsSqlOver(charShingleCtes, CharLshBands)
 
   // ── dedup clusters (pairs → connected components) ──────────────────────
   // The step after near-dup pair mining: label every involved doc with the
@@ -1424,10 +1434,7 @@ object TextQueries {
   // per cluster. Oracle: recursive-CTE reachability closure over the SAME
   // pair relation, min label per node.
   private val dedupClusters: Q = (s, dir) => {
-    val pairs = DedupOps.lshPairsArrayLocal(
-      DedupOps.wordShingleHashes(Tables.documents(s, dir),
-        col("doc_id"), col("text"), ShingleN),
-      NumHashes, Bands, Threshold)
+    val pairs = wordLshPairs(Tables.documents(s, dir))
     DedupOps.connectedComponents(pairs.select(col("d1"), col("d2")))
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -1461,9 +1468,7 @@ object TextQueries {
     * Spark octet_length ≡ DuckDB strlen). */
   private val canonicalDocs: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
-    val pairs = DedupOps.lshPairsArrayLocal(
-      DedupOps.wordShingleHashes(docs, col("doc_id"), col("text"), ShingleN),
-      NumHashes, Bands, Threshold)
+    val pairs = wordLshPairs(docs)
     val labels = DedupOps.connectedComponents(pairs.select(col("d1"), col("d2")))
     DedupOps.canonicalPerCluster(labels, docs,
       col("doc_id"), octet_length(col("text")).cast("long"))
@@ -1502,9 +1507,7 @@ object TextQueries {
     * bucket hash — the split pass adds nothing corpus-sized. */
   private val leakageSafeSplit: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
-    val pairs = DedupOps.lshPairsArrayLocal(
-      DedupOps.wordShingleHashes(docs, col("doc_id"), col("text"), ShingleN),
-      NumHashes, Bands, Threshold)
+    val pairs = wordLshPairs(docs)
     val labels = DedupOps.connectedComponents(pairs.select(col("d1"), col("d2")))
     val bucket = pmod(
       conv(substring(md5(col("cluster_id").cast("string")), 1, 8), 16, 10)
@@ -1667,9 +1670,13 @@ object TextQueries {
   // Unlike HLL, KMV is order statistics over a portable hash, so the
   // oracle replays sketches, merge, and estimates exactly.
   private val KmvK = 64
-  private val kmvSketchQ: Q = (s, dir) => {
-    // hashed feeds the sketch AND both exact sides: checkpoint once so the
-    // corpus scan + distinct runs once, not per consumer (c2258b0 pattern)
+
+  /** The KMV gates' shared prep: the distinct (source, h) word-bigram
+    * hashes and their per-source KMV sketch (source, h ≤ k smallest).
+    * `hashed` feeds the sketch AND both exact sides: both are eagerly
+    * checkpointed so the corpus scan + distinct runs once, not per
+    * consumer (c2258b0 pattern). */
+  private def kmvHashedAndSketch(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val hashed = Tables.documents(s, dir)
       // project tokens BEFORE shingling: inlining tokens() into the
       // shingle lambda re-tokenizes per element — O(tokens²) per doc
@@ -1679,8 +1686,12 @@ object TextQueries {
         explode(TextFunctions.shinglesOf(col("ws"), 2)).as("g"))
       .select(col("source"), DedupOps.shingleHash40(col("g")).as("h"))
       .distinct().localCheckpoint()
-    val sk = graft.operators.KmvSketch.sketch(
-      hashed, col("source"), col("h"), KmvK).localCheckpoint()
+    (hashed, graft.operators.KmvSketch.sketch(
+      hashed, col("source"), col("h"), KmvK).localCheckpoint())
+  }
+
+  private val kmvSketchQ: Q = (s, dir) => {
+    val (hashed, sk) = kmvHashedAndSketch(s, dir)
     val est = graft.operators.KmvSketch.estimate(sk, KmvK)
       .unionByName(graft.operators.KmvSketch.estimate(
         graft.operators.KmvSketch.merge(sk, "ALL", KmvK), KmvK))
@@ -1736,19 +1747,7 @@ object TextQueries {
     * metadata at any corpus size. Exact counts ride along for the
     * accuracy statement. */
   private val kmvIntersectionQ: Q = (s, dir) => {
-    // hashed feeds the sketch AND both exact sides: checkpoint once so the
-    // corpus scan + distinct runs once, not per consumer (c2258b0 pattern)
-    val hashed = Tables.documents(s, dir)
-      // project tokens BEFORE shingling: inlining tokens() into the
-      // shingle lambda re-tokenizes per element — O(tokens²) per doc
-      // (TextFunctions.shinglesOf PERF note; measured 4.3 s → 0.3 s here)
-      .select(col("source"), TextFunctions.tokens(col("text")).as("ws"))
-      .select(col("source"),
-        explode(TextFunctions.shinglesOf(col("ws"), 2)).as("g"))
-      .select(col("source"), DedupOps.shingleHash40(col("g")).as("h"))
-      .distinct().localCheckpoint()
-    val sk = graft.operators.KmvSketch.sketch(
-      hashed, col("source"), col("h"), KmvK).localCheckpoint()
+    val (hashed, sk) = kmvHashedAndSketch(s, dir)
     val est = graft.operators.KmvSketch.pairIntersectEstimates(sk, KmvK)
     val exact = hashed.as("x")
       .join(hashed.as("y"),
@@ -1856,18 +1855,7 @@ object TextQueries {
       Threshold)
   }
 
-  private val dedupIncrementalSql = {
-    import graft.functions.TextFunctions.{NGramHashB => FB, NGramHashP => FP}
-    val rpb = NumHashes / Bands
-    val bandSelects = (0 until Bands).map { b =>
-      val cols = (0 until rpb).map(r => s"mh${b * rpb + r}")
-      val key = cols.foldLeft("CAST(0 AS BIGINT)")((acc, c) =>
-        s"((($acc) * $FB + $c) % $FP)")
-      s"SELECT doc_id, $b AS band, $key AS band_hash FROM sig"
-    }.mkString("\n  UNION ALL ")
-    val sigCols = (0 until NumHashes).map(i =>
-      s"min((${DedupOps.mhA(i)} * g + ${DedupOps.mhB(i)}) % ${DedupOps.MinHashP}) AS mh$i")
-      .mkString(",\n        ")
+  private val dedupIncrementalSql =
     s"""WITH corpus AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
@@ -1892,10 +1880,10 @@ object TextQueries {
        |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS g
        |       FROM sh WHERE g IS NOT NULL),
        |sig AS MATERIALIZED (SELECT doc_id,
-       |        $sigCols
+       |        ${minHashColsSql(NumHashes, "g")}
        |        FROM dt GROUP BY doc_id),
        |bands AS MATERIALIZED (
-       |  $bandSelects),
+       |  ${bandSelectsSql(Bands)}),
        |bb AS (SELECT bands.* FROM bands JOIN flag USING (doc_id) WHERE is_b),
        |ob AS (SELECT bands.* FROM bands JOIN flag USING (doc_id) WHERE NOT is_b),
        |candx AS (SELECT DISTINCT b.doc_id AS d1, o.doc_id AS d2
@@ -1928,7 +1916,6 @@ object TextQueries {
        |LEFT JOIN dox x ON x.doc_id = f.doc_id
        |LEFT JOIN dos s ON s.doc_id = f.doc_id
        |WHERE f.is_b""".stripMargin
-  }
 
   // ── duplicated-passage scrub with reconstruction ───────────────────────
   // The Dolma-style payoff of CDC chunking: remove every cross-doc

@@ -37,13 +37,16 @@ class DedupSpec extends SparkSpec {
   }
 
   test("char-n-gram LSH pairs catch the same near-dups as word shingles here") {
-    val pairs = DedupOps.lshPairsOverShingles(
-        DedupOps.charShingleBag(docs, $"doc_id", $"text", 5),
-        DedupOps.charShingleSet(docs, $"doc_id", $"text", 5),
+    val verified = DedupOps.lshPairsArrayLocal(
+        DedupOps.charShingleHashes(docs, $"doc_id", $"text", 5),
         numHashes = 16, bands = 4, threshold = 0.8)
-      .select($"d1", $"d2").as[(Long, Long)].collect().toSet
+      .as[(Long, Long, Double)].collect().toSet
+    val pairs = verified.map(p => (p._1, p._2))
     assert(pairs.contains((0L, 1L))) // exact dup must survive any threshold
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L)) // unrelated doc stays out
+    // the exact verified set: 0/1 identical, 2 differs from both in its
+    // last word
+    assert(verified == Set((0L, 1L, 1.0), (0L, 2L, 0.857143), (1L, 2L, 0.857143)))
   }
 
   test("repeatedSpans: cross-doc marks merge to maximal spans; within-doc-only repeats excluded") {
@@ -77,14 +80,17 @@ class DedupSpec extends SparkSpec {
     assert(g.length == 1 && g(0).getAs[Long]("n_docs") == 3L) // 0, 1, 3
   }
 
-  test("minHashLshPairs finds exact + near dups above threshold, nothing else") {
-    val pairs = DedupOps.minHashLshPairs(docs, $"doc_id", $"text",
-        shingleN = 3, numHashes = 16, bands = 8, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  test("word-shingle LSH pairs find exact + near dups above threshold, nothing else") {
+    val verified = DedupOps.lshPairsArrayLocal(
+        DedupOps.wordShingleHashes(docs, $"doc_id", $"text", 3),
+        numHashes = 16, bands = 8, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    val pairs = verified.map(p => (p._1, p._2))
     assert(pairs.contains((0L, 1L)))           // exact dup always a candidate
     assert(pairs.contains((0L, 2L)) && pairs.contains((1L, 2L))) // near dup (jaccard 6/8)
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // permutation ≠ sequence near-dup
+    assert(verified == Set((0L, 1L, 1.0), (0L, 2L, 0.75), (1L, 2L, 0.75)))
   }
 
   test("minhash signature of exact dups is identical") {
@@ -107,18 +113,18 @@ class DedupSpec extends SparkSpec {
     val fixture = Tables.documents(spark, sf001)
     def run(banded: Boolean) =
       DedupOps.simHashNearPairs(fixture, $"doc_id", $"text",
-          maxDist = 1, banded = banded)
+          bits = 16, maxDist = 1, bands = 2, banded = banded)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val q = run(banded = false)
     assert(q.nonEmpty) // fixture plants near-dups; empty would test nothing
     assert(run(banded = true) == q)
   }
 
-  test("simHashNearPairs64: 4-band pigeonhole at d<=3 equals the quadratic scan") {
+  test("simHashNearPairs at 64 bits: 4-band pigeonhole at d<=3 equals the quadratic scan") {
     val fixture = Tables.documents(spark, sf001)
     def run(banded: Boolean) =
-      DedupOps.simHashNearPairs64(fixture, $"doc_id", $"text",
-          maxDist = 3, bands = 4, banded = banded)
+      DedupOps.simHashNearPairs(fixture, $"doc_id", $"text",
+          bits = 64, maxDist = 3, bands = 4, banded = banded)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val q = run(banded = false)
     assert(q.nonEmpty) // fixture plants near-dups; empty would test nothing
@@ -238,9 +244,8 @@ class DedupSpec extends SparkSpec {
     val hot = (0L until 200L).map(i =>
       (i, s"alpha beta gamma delta epsilon zeta eta theta iota kappa v$i"))
       .toDF("doc_id", "text")
-    val bands = DedupOps.lshBands(
-      DedupOps.minHashSignatures(
-        DedupOps.shingleBag(hot, $"doc_id", $"text", 3), 16), 8, 2)
+    val bands = DedupOps.bandKeysArrayLocal(
+      DedupOps.wordShingleHashes(hot, $"doc_id", $"text", 3), 16, 8)
     val uncapped = DedupOps.lshCandidates(bands).count()
     val capped = DedupOps.lshCandidates(bands, maxBucket = 16)
     val cappedRows = capped.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -251,6 +256,8 @@ class DedupSpec extends SparkSpec {
     assert(uncapped > 10000L, s"fixture not adversarial enough: $uncapped")
     assert(cappedRows.length.toLong * 10 < uncapped,
       s"cap failed to bound the hot bucket: ${cappedRows.length} of $uncapped pairs")
+    assert(uncapped == 19900L && cappedRows.length == 527,
+      s"hot-bucket candidate counts moved: $uncapped uncapped, ${cappedRows.length} capped")
     // the star pairs still connect every doc into ONE cluster
     val labels = DedupOps.connectedComponents(capped.toDF("d1", "d2")).collect()
       .map(r => r.getLong(1)).toSet

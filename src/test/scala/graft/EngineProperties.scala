@@ -295,8 +295,8 @@ object EngineProperties extends Properties("engine") {
     Prop.forAll(genCorpus) { docs =>
       val df = docs.toDF("doc_id", "text")
       def run(banded: Boolean) =
-        graft.operators.DedupOps.simHashNearPairs64(df, $"doc_id", $"text",
-            maxDist = 3, bands = 4, banded = banded)
+        graft.operators.DedupOps.simHashNearPairs(df, $"doc_id", $"text",
+            bits = 64, maxDist = 3, bands = 4, banded = banded)
           .as[(Long, Long, Long)].collect().toSet
       run(banded = true) == run(banded = false)
     }

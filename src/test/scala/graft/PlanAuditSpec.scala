@@ -536,6 +536,16 @@ class PlanAuditSpec extends SparkSpec {
     // every listed name must still exist — catches renames going stale
     val gone = over1s.filterNot(Queries.all.keySet)
     assert(gone.isEmpty, s"over1s names not in the registry: ${gone.mkString(", ")}")
+    // every `=== <name> ===` section sits inside a code fence: markdown
+    // renders an unfenced plan as prose
+    val unfenced = plansMd.split("\n", -1)
+      .foldLeft((false, Vector.empty[String])) { case ((inFence, acc), l) =>
+        if (l.startsWith("```")) (!inFence, acc)
+        else if (!inFence && l.matches("=+ \\S+ =+")) (inFence, acc :+ l)
+        else (inFence, acc)
+      }._2
+    assert(unfenced.isEmpty,
+      s"PLANS.md plan sections outside a code fence: ${unfenced.mkString(", ")}")
   }
 
   test("no unintended cartesian products in the whole registry") {
