@@ -596,16 +596,8 @@ object StreamingQueries {
       |  UNION ALL
       |  SELECT doc_id + $NdPlantOffset, text || '$NdPerturb' FROM documents
       |  WHERE doc_id % 3 = 0),
-      |toks AS (SELECT doc_id, str_split(text,' ') AS ws FROM docs2),
-      |tok AS (SELECT doc_id, w, i FROM
-      |        (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM toks)
-      |        WHERE w <> ''),
-      |sh AS (SELECT doc_id,
-      |              w || '_' || lead(w,1) OVER win || '_' || lead(w,2) OVER win AS g
-      |       FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY i)),
-      |dt AS MATERIALIZED (SELECT DISTINCT doc_id,
-      |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS g
-      |       FROM sh WHERE g IS NOT NULL),
+      |${TextQueries.wordShingleCtes("docs2", NdShingleN)},
+      |${TextQueries.hashedShingleDt},
       |sig AS MATERIALIZED (SELECT doc_id, $mins
       |        FROM dt GROUP BY doc_id),
       |key0 AS (SELECT doc_id, $fold AS band_key FROM sig),

@@ -1261,18 +1261,33 @@ object TextQueries {
       |FROM f GROUP BY 1 HAVING count(*) > 1""".stripMargin
 
   // ── MinHash signatures + LSH near-dup pairs ────────────────────────────
-  // Shared oracle CTE prefix: tokens → 3-gram shingles → distinct features
-  // → 16 min-hash columns. The lead()-window shingling mirrors Spark's
-  // transform(sequence(...)) exactly (empties filtered first, tail NULLs
-  // dropped).
-  private def shingleCtes: String =
-    s"""WITH toks AS (SELECT doc_id, str_split(text,' ') AS ws FROM documents),
+  /** Oracle CTEs `toks → tok → sh` over `src`'s (doc_id, text): the
+    * word `n`-gram shingles `g`, joined with '_'. The lead()-window
+    * shingling mirrors Spark's transform(sequence(...)) exactly (empties
+    * filtered first; the tail's NULL shingles are left for the caller's
+    * `WHERE g IS NOT NULL`). No leading `WITH`, no trailing comma. */
+  private[queries] def wordShingleCtes(src: String, n: Int): String = {
+    val g = (1 until n).map(k => s"lead(w,$k) OVER win").mkString("w || '_' || ", " || '_' || ", "")
+    s"""toks AS (SELECT doc_id, str_split(text,' ') AS ws FROM $src),
        |tok AS (SELECT doc_id, w, i FROM
        |        (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM toks)
        |        WHERE w <> ''),
        |sh AS (SELECT doc_id,
-       |              w || '_' || lead(w,1) OVER win || '_' || lead(w,2) OVER win AS g
-       |       FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY i)),
+       |              $g AS g
+       |       FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY i))""".stripMargin
+  }
+
+  /** The `dt` CTE over [[wordShingleCtes]]: distinct (doc_id, g) with g
+    * the shingle's 40-bit md5 prefix, as the row-local kernels hash it. */
+  private[queries] val hashedShingleDt: String =
+    """dt AS MATERIALIZED (SELECT DISTINCT doc_id,
+      |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS g
+      |       FROM sh WHERE g IS NOT NULL)""".stripMargin
+
+  // Oracle CTE prefix: 3-gram shingles → distinct features → 16 min-hash
+  // columns.
+  private def shingleCtes: String =
+    s"""WITH ${wordShingleCtes("documents", ShingleN)},
        |dt AS MATERIALIZED (SELECT DISTINCT doc_id, g FROM sh WHERE g IS NOT NULL),
        |dh AS (SELECT doc_id,
        |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS h
@@ -1295,16 +1310,8 @@ object TextQueries {
   // engines see identical — possibly collided — sets, so 40-bit
   // collisions can never diverge the gate).
   private def shingleCtesHashed: String =
-    s"""WITH toks AS (SELECT doc_id, str_split(text,' ') AS ws FROM documents),
-       |tok AS (SELECT doc_id, w, i FROM
-       |        (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM toks)
-       |        WHERE w <> ''),
-       |sh AS (SELECT doc_id,
-       |              w || '_' || lead(w,1) OVER win || '_' || lead(w,2) OVER win AS g
-       |       FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY i)),
-       |dt AS MATERIALIZED (SELECT DISTINCT doc_id,
-       |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS g
-       |       FROM sh WHERE g IS NOT NULL),
+    s"""WITH ${wordShingleCtes("documents", ShingleN)},
+       |$hashedShingleDt,
        |sig AS MATERIALIZED (SELECT doc_id,
        |        ${minHashColsSql(NumHashes, "g")}
        |        FROM dt GROUP BY doc_id)""".stripMargin
@@ -1622,13 +1629,7 @@ object TextQueries {
   }
 
   private val decontaminateNgramsSql =
-    s"""WITH toks AS (SELECT doc_id, str_split(text,' ') AS ws FROM documents),
-       |tok AS (SELECT doc_id, w, i FROM
-       |        (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM toks)
-       |        WHERE w <> ''),
-       |sh AS (SELECT doc_id,
-       |              ${(1 until DecontamN).map(k => s"lead(w,$k) OVER win").mkString("w || '_' || ", " || '_' || ", "")} AS g
-       |       FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY i)),
+    s"""WITH ${wordShingleCtes("documents", DecontamN)},
        |dh AS (SELECT DISTINCT doc_id,
        |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS h
        |       FROM sh WHERE g IS NOT NULL),
@@ -1869,16 +1870,8 @@ object TextQueries {
        |flag AS (SELECT doc_id, (doc_id % 3 = 0 OR
        |                         doc_id NOT IN (SELECT doc_id FROM documents)) AS is_b
        |         FROM corpus),
-       |toks AS (SELECT doc_id, str_split(text,' ') AS ws FROM corpus),
-       |tok AS (SELECT doc_id, w, i FROM
-       |        (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM toks)
-       |        WHERE w <> ''),
-       |sh AS (SELECT doc_id,
-       |              w || '_' || lead(w,1) OVER win || '_' || lead(w,2) OVER win AS g
-       |       FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY i)),
-       |dt AS MATERIALIZED (SELECT DISTINCT doc_id,
-       |              CAST(('0x' || substring(md5(g), 1, 10)) AS BIGINT) AS g
-       |       FROM sh WHERE g IS NOT NULL),
+       |${wordShingleCtes("corpus", ShingleN)},
+       |$hashedShingleDt,
        |sig AS MATERIALIZED (SELECT doc_id,
        |        ${minHashColsSql(NumHashes, "g")}
        |        FROM dt GROUP BY doc_id),

@@ -62,12 +62,14 @@ class KafkaParitySpec extends SparkSpec {
     // 20 frames, 10 s apart, all-distinct uids → windows 6,6,6,2
     mem.addData((0 until 20).map(i =>
       frame(1468244340L + 10L * i, (i + 1).toString, i.toLong)): _*)
-    // rejects: corrupt JSON, missing uid, empty uid — all dropped, never
-    // epoch-0-bucketed (FIXTURES.md §1 engine policy)
+    // rejects: corrupt JSON, missing uid, empty uid, a ts whose
+    // microseconds overflow a Long — all dropped, never epoch-0-bucketed
+    // (FIXTURES.md §1 engine policy)
     mem.addData(
       record("not json at all", 1468244350L, 100L),
       record("""{"ts":1468244351}""", 1468244351L, 101L),
-      record("""{"ts":1468244352,"uid":""}""", 1468244352L, 102L))
+      record("""{"ts":1468244352,"uid":""}""", 1468244352L, 102L),
+      record("""{"ts":9300000000000000,"uid":"a"}""", 1468244353L, 103L))
     // watermark flush for append mode
     mem.addData(frame(1468250000L, "sentinel", 200L))
     val q = UniqueUsersApp.buildPlan(KafkaTransport.frames(wireDF(mem)), cfg)

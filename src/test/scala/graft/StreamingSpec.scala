@@ -125,7 +125,8 @@ class StreamingSpec extends SparkSpec {
       """{"ts":1468244341,"uid":""}""",
       """not json at all""",
       """{"uid":"no-ts"}""",
-      """{"ts":1468244342}""").toDF("value")
+      """{"ts":1468244342}""",
+      """{"ts":9300000000000000,"uid":"a"}""").toDF("value")
     val parsed = LogFrames.valid(LogFrames.parse(raw, $"value")).collect()
     assert(parsed.length == 1 && parsed(0).getString(1) == "good")
   }
